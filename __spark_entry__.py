@@ -1053,32 +1053,30 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities and keep flags are value-checked bit-for-bit thanks
     to the fixed-point micro-unit discipline (exact bigint sums +
     identical IEEE floor-quantization chains; no engine round())."""
+    from pyspark import StorageLevel
+
     from auto_ts_spark.operators import quality_classifier as QC
+    from auto_ts_spark.operators.partitioning import MaterializeScope
 
     docs = load_table(spark, sf_dir, "documents")
-    # training and scoring cover the SAME documents: reuse the
-    # trainer's persisted feature table for the scoring pass (r13 —
-    # one tokenize→hash→aggregate pass over the corpus, not two)
-    w, labeled = QC.train_quality_classifier(
-        docs,
-        F.col("lang") == "en",
-        n_buckets=128,
-        iters=3,
-        lr=1.0,
-        return_features=True,
-    )
-    # r14 (advisor item): eagerly checkpoint the scored output — one
-    # narrow row per document — then RELEASE the trainer's persisted
-    # O(docs x tokens) feature table here, instead of leaking it until
-    # an external clearCache. Checkpoint blocks are freed by the
-    # ContextCleaner when the returned frame is dropped; a persisted
-    # frame pinned in the CacheManager never is. Same pattern as
-    # curate()'s neg_fraction==1.0 classifier branch.
-    scored = QC.classify(
-        docs, w, n_buckets=128, features=labeled
-    ).localCheckpoint(eager=True)
-    labeled.unpersist()
-    return scored
+    label = F.col("lang") == "en"
+    # training and scoring cover the SAME documents: hold one labeled
+    # feature table for both (r13 — one tokenize→hash→aggregate pass
+    # over the corpus, not two). The scored output — one narrow row per
+    # document — is checkpointed inside the scope, so the scope can
+    # release the O(docs x tokens) feature table before returning; the
+    # checkpoint's blocks are freed with the returned frame.
+    with MaterializeScope() as scope:
+        labeled = scope.hold(
+            QC.labeled_features(docs, label, n_buckets=128),
+            StorageLevel.MEMORY_AND_DISK,
+        )
+        w = QC.train_quality_classifier(
+            docs, label, n_buckets=128, iters=3, lr=1.0, features=labeled
+        )
+        return scope.checkpoint(
+            QC.classify(docs, w, n_buckets=128, features=labeled)
+        )
 
 
 def q_repeated_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,23 +25,36 @@ unique text; mixture before budget so budgets apply to the mixed
 distribution) and threads the id/text column names through. Every
 stage is optional — pass None/False to skip it.
 
-The chain is lazy with two documented exceptions: a GLOBAL token
-budget (``token_budget`` with ``budget_by=None``) uses the two-pass
-distributed cumsum, whose offset collection materializes the upstream
-stages inside the ``curate`` call, and the LM-perplexity gate
-(``perplexity_ref``) materializes its LM counts and tercile rank the
-same way; a DSIR stage (``dsir_target``) materializes its bucket
-distributions, rank offsets, and — when ``dsir_keep`` is fractional —
-one survivor count. Per-key budgets (``budget_by``
-set) and every other stage stay lazy. ``stage_counts=True`` adds an
-eager per-stage row count report (one count() action per enabled
-stage — diagnostic runs only, not the 100 TB hot path).
+The chain is lazy except at these eager points, each inside the
+``curate`` call:
+
+- the stages that read their input twice — boilerplate removal, span
+  scrub, the repetition gate and near-dedup — first checkpoint it
+  (the near-dup stage's connected components run eagerly anyway);
+- the LM-perplexity gate (``perplexity_ref``) trains its LM, counts
+  and rank-offsets the scored corpus, and checkpoints its survivor
+  ids;
+- the classifier gate (``classifier_ref``) runs its training
+  iterations and checkpoints its survivor ids;
+- a DSIR stage (``dsir_target``) collects its bucket distributions
+  and rank offsets, plus one survivor count when ``dsir_keep`` is
+  fractional;
+- a GLOBAL token budget (``token_budget`` with ``budget_by=None``)
+  collects the offsets of its two-pass distributed cumsum;
+- ``stage_counts=True`` checkpoints and counts every enabled stage
+  (diagnostic runs only, not the 100 TB hot path).
+
+Per-key budgets (``budget_by`` set) and every other stage stay lazy.
+Intermediates a stage holds for its own reuse are released before
+``curate`` returns or raises; the checkpoints the result reads are
+freed with it.
 """
 
 from __future__ import annotations
 
 import time as _time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -103,7 +116,10 @@ def curate(
     from auto_ts_spark.operators import dedup as DD
     from auto_ts_spark.operators.budget import budget_select
     from auto_ts_spark.operators.decontam import decontaminate
-    from auto_ts_spark.operators.partitioning import ensure_parallelism
+    from auto_ts_spark.operators.partitioning import (
+        MaterializeScope,
+        ensure_parallelism,
+    )
     from auto_ts_spark.operators.pii import redact_documents
     from auto_ts_spark.operators.sampling import mixture_sample
     from auto_ts_spark.operators.textops import (
@@ -120,409 +136,352 @@ def curate(
 
     counts: dict[str, int] = {}
     _last_tick = [_time.perf_counter()]
+    # the scope owns every intermediate a stage materializes for its
+    # own reuse (scrub tokens, LM tables, classifier features, DSIR
+    # weights) and releases them when curate returns or raises; the
+    # eager checkpoints the returned frame reads stay, freed by the
+    # ContextCleaner with it
+    with MaterializeScope() as scope:
 
-    def tick(name: str, frame: DataFrame) -> DataFrame:
-        if stage_counts:
-            # checkpoint each counted stage so later ticks don't
-            # recompute the whole upstream chain per count — the
-            # near-dup stage dominates wall-clock and would otherwise
-            # be re-executed for every later stage's count
-            frame = frame.localCheckpoint(eager=True)
-            counts[name] = frame.count()
-            if stage_seconds is not None:
-                now = _time.perf_counter()
-                stage_seconds[name] = now - _last_tick[0]
-                _last_tick[0] = now
-        return frame
+        def tick(name: str, frame: DataFrame) -> DataFrame:
+            if stage_counts:
+                # checkpoint each counted stage so later ticks don't
+                # recompute the whole upstream chain per count — the
+                # near-dup stage dominates wall-clock and would otherwise
+                # be re-executed for every later stage's count; a reuse
+                # point right after a tick finds the frame checkpointed
+                frame = scope.checkpoint(frame)
+                counts[name] = frame.count()
+                if stage_seconds is not None:
+                    now = _time.perf_counter()
+                    stage_seconds[name] = now - _last_tick[0]
+                    _last_tick[0] = now
+            return frame
 
-    out = tick("input", df)
-    if html_input is not None:
-        # raw-web head: markup extraction runs before EVERYTHING —
-        # every later stage (line rules, quality stats, fingerprints)
-        # is defined over visible text, not markup. One Arrow-batched
-        # projection, zero shuffle; the raw HTML column is dropped so
-        # downstream shuffles never carry the markup bytes (~5-10×
-        # the visible text at corpus scale).
-        from auto_ts_spark.operators.markup import html_extract
+        out = tick("input", df)
+        if html_input is not None:
+            # raw-web head: markup extraction runs before EVERYTHING —
+            # every later stage (line rules, quality stats, fingerprints)
+            # is defined over visible text, not markup. One Arrow-batched
+            # projection, zero shuffle; the raw HTML column is dropped so
+            # downstream shuffles never carry the markup bytes (~5-10×
+            # the visible text at corpus scale).
+            from auto_ts_spark.operators.markup import html_extract
 
-        out = tick(
-            "html_extract",
-            html_extract(
-                out,
-                html_col=html_input,
-                out_col=text_col,
-                normalize=html_normalize,
-                drop_html=True,
-            ),
-        )
-    if line_clean:
-        out = tick(
-            "line_clean",
-            c4_line_clean(out, text_col=text_col, id_col=id_col, mode="apply"),
-        )
-    if boilerplate_max_docs is not None:
-        # apply-mode boilerplate removal reads its input twice (line
-        # counting + the rejoin) — cache so the upstream line-clean
-        # regex work and source scan run once (deterministic, so an
-        # evicted block recomputes correctly)
-        if not stage_counts:  # tick() already checkpointed it
-            out = out.cache()
-        out = tick(
-            "boilerplate",
-            drop_boilerplate_lines(
-                out,
-                text_col=text_col,
-                id_col=id_col,
-                max_docs_per_line=boilerplate_max_docs,
-                mode="apply",
-            ),
-        )
-    if scrub_spans:
-        # ExactSubstr-approx repeated-span scrubbing (textops.
-        # scrub_repeated_spans) — like boilerplate, apply mode reads
-        # its input twice (fingerprint counting + the rejoin)
-        from auto_ts_spark.operators.textops import scrub_repeated_spans
-
-        if not stage_counts:  # tick() already checkpointed it
-            out = out.cache()
-        # accept release responsibility for the operator's gated
-        # DISK_ONLY token persist (one tokenize pass at scale instead
-        # of two) ONLY when this call has a guaranteed eager point
-        # after which the scrub output is materialized somewhere every
-        # later consumer reads from: the tick() checkpoint
-        # (stage_counts) or the pre-near-dedup cache, populated by the
-        # near-dup stage's eager connected components. Without such a
-        # point the final caller action would re-read the released
-        # blocks' lineage and pay double tokenize again — so pass no
-        # handles and the operator persists nothing (safe recompute).
-        _scrub_handles: list | None = (
-            [] if (stage_counts or near_dedup) else None
-        )
-        out = tick(
-            "scrub_spans",
-            scrub_repeated_spans(
-                out,
-                text_col=text_col,
-                id_col=id_col,
-                window=scrub_window,
-                mode="apply",
-                release_handles=_scrub_handles,
-            ),
-        )
-        if stage_counts and _scrub_handles:
-            # tick() just checkpointed the scrub output eagerly — the
-            # token blocks are dead now
-            for h in _scrub_handles:
-                h.unpersist()
-            _scrub_handles = []
-    else:
-        _scrub_handles = None
-    if quality:
-        # the gate is one boolean expression over the text column —
-        # a shuffle-free filter, decision-identical to quality_filter
-        # (both build on the same shared metric/rule expressions)
-        out = tick("quality", out.filter(quality_keep_expr(text_col)))
-    if repetition:
-        # the Gopher repetition family (opt-in — it shuffles per
-        # n-gram order, so it runs AFTER the cheap inline gate has
-        # already shrunk the corpus); drop-list join keeps the chain's
-        # column set unchanged. Cache: the gate derives its drop list
-        # from the same frame it anti-joins, the self-join pattern the
-        # boilerplate/near-dup stages cache for as well
-        if not stage_counts:  # tick() already checkpointed it
-            out = out.cache()
-        rep_drop = (
-            repetition_filter(out, text_col=text_col, id_col=id_col)
-            .filter(~F.col("keep"))
-            .select(id_col)
-        )
-        out = tick("repetition", out.join(rep_drop, id_col, "left_anti"))
-    if redact:
-        out = tick("redact", redact_documents(out, text_col=text_col))
-    if dedup_exact:
-        out = tick(
-            "dedup_exact", DD.dedup_exact(out, text_col=text_col, id_col=id_col)
-        )
-    if near_dedup:
-        # the near-dup stage is eager by nature (iterative connected
-        # components), so the upstream chain is computed inside this
-        # call no matter what — cache it so the final materialization
-        # reuses those rows instead of recomputing quality/redact/
-        # exact-dedup from the source scan a second time. cache (not
-        # checkpoint): the upstream chain is deterministic, so an
-        # evicted/lost block recomputes correctly, and the blocks stay
-        # evictable under memory pressure at scale.
-        if not stage_counts:  # tick() already checkpointed it
-            out = out.cache()
-        if near_dedup_method == "minhash":
-            clusters = DD.dedup_clusters(
-                out,
-                text_col=text_col,
-                id_col=id_col,
-                max_bucket_size=near_dedup_max_bucket,
+            out = tick(
+                "html_extract",
+                html_extract(
+                    out,
+                    html_col=html_input,
+                    out_col=text_col,
+                    normalize=html_normalize,
+                    drop_html=True,
+                ),
             )
-        elif near_dedup_method == "simhash":
-            # SimHash blocking: cheaper signatures, hamming-ball
-            # candidate generation — the better fit for short/near-
-            # identical documents; same clustering + retention shape
-            pairs = DD.simhash_pairs(out, text_col=text_col, id_col=id_col)
-            clusters = DD.clusters_from_pairs(pairs, id_col=id_col)
-        elif near_dedup_method == "semantic":
-            # SemDeDup blocking (similarity.semantic_dedup): dedup on
-            # MEANING via a per-document embedding column — ``embeddings``
-            # maps id_col -> embedding_vec_col. Joined to the surviving
-            # docs first so the quantizer and pair join only see live
-            # rows; batch-only (curate_stream keeps lexical methods).
-            from auto_ts_spark.operators.similarity import semantic_dedup
+        if line_clean:
+            out = tick(
+                "line_clean",
+                c4_line_clean(out, text_col=text_col, id_col=id_col, mode="apply"),
+            )
+        if boilerplate_max_docs is not None:
+            # apply-mode boilerplate removal reads its input twice (line
+            # counting + the rejoin) — checkpoint so the upstream
+            # line-clean regex work and source scan run once
+            out = scope.checkpoint(out)
+            out = tick(
+                "boilerplate",
+                drop_boilerplate_lines(
+                    out,
+                    text_col=text_col,
+                    id_col=id_col,
+                    max_docs_per_line=boilerplate_max_docs,
+                    mode="apply",
+                ),
+            )
+        if scrub_spans:
+            # ExactSubstr-approx repeated-span scrubbing (textops.
+            # scrub_repeated_spans) — like boilerplate, apply mode reads
+            # its input twice (fingerprint counting + the rejoin). Above
+            # its size gate the operator holds its token frame in the
+            # scope (one tokenize pass per action instead of two); the
+            # next checkpoint (a tick, or the repetition/near-dup reuse
+            # point) reads the scrub output while the tokens are held.
+            from auto_ts_spark.operators.textops import scrub_repeated_spans
 
-            if embeddings is None:
-                raise ValueError(
-                    "near_dedup_method='semantic' needs an `embeddings` "
-                    f"DataFrame with ({id_col}, {embedding_vec_col})"
+            out = scope.checkpoint(out)
+            out = tick(
+                "scrub_spans",
+                scrub_repeated_spans(
+                    out,
+                    text_col=text_col,
+                    id_col=id_col,
+                    window=scrub_window,
+                    mode="apply",
+                    scope=scope,
+                ),
+            )
+        if quality:
+            # the gate is one boolean expression over the text column —
+            # a shuffle-free filter, decision-identical to quality_filter
+            # (both build on the same shared metric/rule expressions)
+            out = tick("quality", out.filter(quality_keep_expr(text_col)))
+        if repetition:
+            # the Gopher repetition family (opt-in — it shuffles per
+            # n-gram order, so it runs AFTER the cheap inline gate has
+            # already shrunk the corpus); drop-list join keeps the
+            # chain's column set unchanged. Checkpoint: the gate derives
+            # its drop list from the same frame it anti-joins, the
+            # self-join pattern the boilerplate/near-dup stages
+            # checkpoint for as well
+            out = scope.checkpoint(out)
+            rep_drop = (
+                repetition_filter(out, text_col=text_col, id_col=id_col)
+                .filter(~F.col("keep"))
+                .select(id_col)
+            )
+            out = tick("repetition", out.join(rep_drop, id_col, "left_anti"))
+        if redact:
+            out = tick("redact", redact_documents(out, text_col=text_col))
+        if dedup_exact:
+            out = tick(
+                "dedup_exact", DD.dedup_exact(out, text_col=text_col, id_col=id_col)
+            )
+        if near_dedup:
+            # the near-dup stage is eager by nature (iterative connected
+            # components), so the upstream chain is computed inside this
+            # call no matter what — checkpoint it so the final
+            # materialization reuses those rows instead of recomputing
+            # quality/redact/exact-dedup from the source scan a second
+            # time
+            out = scope.checkpoint(out)
+            if near_dedup_method == "minhash":
+                clusters = DD.dedup_clusters(
+                    out,
+                    text_col=text_col,
+                    id_col=id_col,
+                    max_bucket_size=near_dedup_max_bucket,
                 )
-            vecs = embeddings.select(
-                id_col, embedding_vec_col
-            ).join(out.select(id_col), id_col)
-            clusters = semantic_dedup(
-                vecs,
+            elif near_dedup_method == "simhash":
+                # SimHash blocking: cheaper signatures, hamming-ball
+                # candidate generation — the better fit for short/near-
+                # identical documents; same clustering + retention shape
+                pairs = DD.simhash_pairs(out, text_col=text_col, id_col=id_col)
+                clusters = DD.clusters_from_pairs(pairs, id_col=id_col)
+            elif near_dedup_method == "semantic":
+                # SemDeDup blocking (similarity.semantic_dedup): dedup on
+                # MEANING via a per-document embedding column — ``embeddings``
+                # maps id_col -> embedding_vec_col. Joined to the surviving
+                # docs first so the quantizer and pair join only see live
+                # rows; batch-only (curate_stream keeps lexical methods).
+                from auto_ts_spark.operators.similarity import semantic_dedup
+
+                if embeddings is None:
+                    raise ValueError(
+                        "near_dedup_method='semantic' needs an `embeddings` "
+                        f"DataFrame with ({id_col}, {embedding_vec_col})"
+                    )
+                vecs = embeddings.select(
+                    id_col, embedding_vec_col
+                ).join(out.select(id_col), id_col)
+                clusters = semantic_dedup(
+                    vecs,
+                    id_col=id_col,
+                    vec_col=embedding_vec_col,
+                    threshold=semantic_threshold,
+                    n_centroids=semantic_centroids,
+                )
+            else:
+                raise ValueError(
+                    f"unknown near_dedup_method: {near_dedup_method!r}"
+                )
+            drop = clusters.filter(~F.col("is_keep")).select(id_col)
+            out = tick("near_dedup", out.join(drop, id_col, "left_anti"))
+        if perplexity_ref is not None:
+            # CCNet LM-perplexity gate (lm_quality): train a bigram
+            # stupid-backoff LM on the trusted reference, tercile the
+            # surviving corpus by per-token perplexity, keep the
+            # ``perplexity_keep`` buckets (CCNet keeps head+middle).
+            # Ordered after dedup, as in CCNet, so the LM scores each
+            # unique document once. Costs one per-doc shuffle (scoring
+            # agg) + the two-pass tercile rank + a semi join on id; docs
+            # with zero tokens have no perplexity and are dropped.
+            from auto_ts_spark.operators.lm_quality import (
+                perplexity_score,
+                perplexity_tercile_assign,
+                train_ngram_lm,
+            )
+
+            lm = train_ngram_lm(
+                perplexity_ref, text_col=text_col, id_col=id_col, scope=scope
+            )
+            assigned = perplexity_tercile_assign(
+                perplexity_score(out, lm, text_col=text_col, id_col=id_col),
                 id_col=id_col,
-                vec_col=embedding_vec_col,
-                threshold=semantic_threshold,
-                n_centroids=semantic_centroids,
             )
-        else:
-            raise ValueError(
-                f"unknown near_dedup_method: {near_dedup_method!r}"
+            # checkpoint the survivor-id column (one small id frame): the
+            # returned chain then reads neither the LM tables nor the
+            # scored corpus, so the scope can release the LM's count
+            # table when curate returns. The tercile stage already runs
+            # eagerly (its scalar count + rank-offset collect), so this
+            # adds only the bucket filter.
+            keep_ids = scope.checkpoint(
+                assigned.filter(F.col("bucket").isin(*perplexity_keep)).select(
+                    id_col
+                )
             )
-        drop = clusters.filter(~F.col("is_keep")).select(id_col)
-        out = tick("near_dedup", out.join(drop, id_col, "left_anti"))
-        if _scrub_handles:
-            # the near-dup stage's eager connected components just
-            # materialized the pre-near-dedup cache (which includes the
-            # scrub output), so every later consumer reads that cache:
-            # the scrub stage's token blocks are dead. An evicted cache
-            # block recomputes correctly — it would just pay the second
-            # tokenize again.
-            for h in _scrub_handles:
-                h.unpersist()
-            _scrub_handles = []
-    if perplexity_ref is not None:
-        # CCNet LM-perplexity gate (lm_quality): train a bigram
-        # stupid-backoff LM on the trusted reference, tercile the
-        # surviving corpus by per-token perplexity, keep the
-        # ``perplexity_keep`` buckets (CCNet keeps head+middle).
-        # Ordered after dedup, as in CCNet, so the LM scores each
-        # unique document once. Costs one per-doc shuffle (scoring
-        # agg) + the two-pass tercile rank + a semi join on id; docs
-        # with zero tokens have no perplexity and are dropped.
-        from auto_ts_spark.operators.lm_quality import (
-            perplexity_score,
-            perplexity_tercile_assign,
-            train_ngram_lm,
-        )
+            out = tick("perplexity", out.join(keep_ids, id_col, "left_semi"))
+        if classifier_ref is not None:
+            # GPT-3 appendix-A quality classifier gate
+            # (operators/quality_classifier.py): train the hashed-n-gram
+            # logistic model with the trusted reference as positives and a
+            # deterministic hash sample of the surviving corpus as
+            # negatives (GPT-3: WebText/Wikipedia/books positives, random
+            # CommonCrawl negatives), then keep documents scoring >=
+            # ``classifier_threshold``. Reference ids are remapped to a
+            # disjoint negative range so a reference that overlaps the
+            # corpus (the common case) can't double-label a document.
+            from auto_ts_spark.operators.quality_classifier import (
+                classify,
+                labeled_features,
+                train_quality_classifier,
+            )
+            from auto_ts_spark.operators.sampling import deterministic_sample
 
-        lm = train_ngram_lm(perplexity_ref, text_col=text_col, id_col=id_col)
-        assigned = perplexity_tercile_assign(
-            perplexity_score(out, lm, text_col=text_col, id_col=id_col),
-            id_col=id_col,
-        )
-        # materialize the survivor-id column (one small id frame — the
-        # same trick the DSIR stage's survivor count uses) so the LM's
-        # cached count tables (uni/bi, pinned by train_ngram_lm for
-        # their multiple scoring consumers) can be released HERE,
-        # unconditionally, instead of surviving until some caller
-        # action that may never come — repeated curate() calls in one
-        # session then accumulate no O(vocab + bigrams) cached blocks.
-        # The tercile stage already runs eagerly inside this call (its
-        # scalar count + rank-offset collect), so checkpointing the
-        # final id projection adds only the bucket filter, and the
-        # rank frame itself is not cached (pin_result=False inside
-        # perplexity_tercile_assign).
-        keep_ids = (
-            assigned.filter(F.col("bucket").isin(*perplexity_keep))
-            .select(id_col)
-            .localCheckpoint(eager=True)
-        )
-        lm.release()
-        out = tick("perplexity", out.join(keep_ids, id_col, "left_semi"))
-    if classifier_ref is not None:
-        # GPT-3 appendix-A quality classifier gate
-        # (operators/quality_classifier.py): train the hashed-n-gram
-        # logistic model with the trusted reference as positives and a
-        # deterministic hash sample of the surviving corpus as
-        # negatives (GPT-3: WebText/Wikipedia/books positives, random
-        # CommonCrawl negatives), then keep documents scoring >=
-        # ``classifier_threshold``. Reference ids are remapped to a
-        # disjoint negative range so a reference that overlaps the
-        # corpus (the common case) can't double-label a document.
-        from auto_ts_spark.operators.quality_classifier import (
-            classify,
-            train_quality_classifier,
-        )
-        from auto_ts_spark.operators.sampling import deterministic_sample
-
-        neg = (
-            deterministic_sample(out, classifier_neg_fraction, id_col=id_col)
-            if classifier_neg_fraction < 1.0
-            else out
-        )
-        train_docs = (
-            classifier_ref.select(
-                (-F.col(id_col) - 1).alias(id_col), F.col(text_col)
+            neg = (
+                deterministic_sample(out, classifier_neg_fraction, id_col=id_col)
+                if classifier_neg_fraction < 1.0
+                else out
             )
-            .unionByName(neg.select(F.col(id_col), F.col(text_col)))
-        )
-        if classifier_neg_fraction < 1.0:
-            # negatives are a strict sample of the corpus, so the
-            # trainer's feature table does not cover every document to
-            # score — train and score independently (as before)
+            train_docs = (
+                classifier_ref.select(
+                    (-F.col(id_col) - 1).alias(id_col), F.col(text_col)
+                )
+                .unionByName(neg.select(F.col(id_col), F.col(text_col)))
+            )
+            label = F.col(id_col) < 0
+            labeled = scope.hold(
+                labeled_features(train_docs, label, text_col=text_col, id_col=id_col),
+                StorageLevel.MEMORY_AND_DISK,
+            )
             w = train_quality_classifier(
                 train_docs,
-                F.col(id_col) < 0,
+                label,
                 text_col=text_col,
                 id_col=id_col,
                 iters=classifier_iters,
                 lr=classifier_lr,
+                features=labeled,
             )
-            keep_ids = (
+            # when the whole surviving corpus is the negative class the
+            # held feature table already covers every document to
+            # score: reuse it (r13 — one corpus tokenize→hash→aggregate
+            # pass for the stage instead of two). The corpus rows are
+            # the non-negative ids — the invariant the reference-id
+            # remap above relies on. A strict negative sample does not
+            # cover the corpus, so scoring builds its own features.
+            keep_ids = scope.checkpoint(
                 classify(
                     out,
                     w,
                     text_col=text_col,
                     id_col=id_col,
                     threshold=classifier_threshold,
+                    features=(
+                        labeled.filter(F.col("id") >= 0)
+                        if classifier_neg_fraction >= 1.0
+                        else None
+                    ),
                 )
                 .filter(F.col("keep"))
                 .select(id_col)
             )
-        else:
-            # the whole surviving corpus is the negative class, so the
-            # trainer's persisted feature table already holds every
-            # document to score: reuse it (r13 — one corpus tokenize→
-            # hash→aggregate pass for the stage instead of two). The
-            # corpus rows are the non-negative ids — the same
-            # corpus-ids-are-nonnegative invariant the reference-id
-            # remap above already relies on. keep_ids is checkpointed
-            # (one small id frame, the perplexity-stage pattern) so
-            # the feature blocks can be released HERE instead of
-            # leaking until some caller action.
-            w, labeled = train_quality_classifier(
-                train_docs,
-                F.col(id_col) < 0,
-                text_col=text_col,
-                id_col=id_col,
-                iters=classifier_iters,
-                lr=classifier_lr,
-                return_features=True,
+            out = tick("classifier", out.join(keep_ids, id_col, "left_semi"))
+        if dsir_target is not None:
+            # DSIR targeted selection (operators/dsir.py — Xie et al. 2023
+            # importance resampling): weight every surviving document by
+            # the hashed-n-gram log-likelihood ratio of target over raw,
+            # then keep the top ``dsir_keep`` (int = count, float =
+            # fraction of survivors; one scalar count when fractional).
+            # ``dsir_stochastic`` uses the paper's Gumbel-top-k resampling
+            # (seeded, retry-deterministic) instead of the deterministic
+            # top-k. Ordered after the quality gates — DSIR assumes its
+            # raw pool is already language/quality filtered — and before
+            # decontamination/mixture/budget, which operate on whatever
+            # subset survives selection.
+            from auto_ts_spark.operators.dsir import (
+                dsir_log_weights,
+                gumbel_select,
+                select_top_weighted,
             )
-            keep_ids = (
-                classify(
+
+            wts = dsir_log_weights(
+                out, dsir_target, text_col=text_col, id_col=id_col
+            )
+            if isinstance(dsir_keep, float):
+                if not 0.0 < dsir_keep <= 1.0:
+                    raise ValueError(
+                        f"fractional dsir_keep must be in (0, 1], got {dsir_keep!r}"
+                    )
+                # the survivor count and the top-k rank below both consume
+                # wts — hold it across the two (r13) so the gram-scoring
+                # pass runs once, not twice; the selection's eager rank
+                # checkpoint cuts the returned chain's lineage above it
+                wts = scope.hold(wts, StorageLevel.MEMORY_AND_DISK)
+                n_sel = max(1, int(dsir_keep * wts.count()))
+            else:
+                # bool is an int subclass — dsir_keep=True would silently
+                # mean "keep 1 document"; and a count < 1 empties the
+                # corpus. Both are caller bugs, mirror the fractional check.
+                if isinstance(dsir_keep, bool) or int(dsir_keep) < 1:
+                    raise ValueError(
+                        f"integer dsir_keep must be a count >= 1, got {dsir_keep!r}"
+                    )
+                n_sel = int(dsir_keep)
+            sel = (
+                gumbel_select(wts, n_sel, id_col=id_col, seed=dsir_seed)
+                if dsir_stochastic
+                else select_top_weighted(wts, n_sel, id_col=id_col)
+            )
+            out = tick(
+                "dsir", out.join(sel.select(id_col), id_col, "left_semi")
+            )
+        if benchmark is not None:
+            out = tick(
+                "decontaminate",
+                decontaminate(
+                    out, benchmark, text_col=text_col, id_col=id_col, n=decontam_n
+                ),
+            )
+        copy_col = "copy_n"
+        if mixture is not None:
+            while copy_col in out.columns:  # don't clobber a caller column
+                copy_col += "_"
+            out = tick(
+                "mixture",
+                mixture_sample(
+                    out, mixture, key_col=mixture_key, id_col=id_col,
+                    copy_col=copy_col,
+                ),
+            )
+        if token_budget is not None:
+            out = tick(
+                "budget",
+                budget_select(
                     out,
-                    w,
+                    token_budget,
+                    by=budget_by,
+                    priority_col=budget_priority,
                     text_col=text_col,
                     id_col=id_col,
-                    threshold=classifier_threshold,
-                    features=labeled.filter(F.col("id") >= 0),
-                )
-                .filter(F.col("keep"))
-                .select(id_col)
-                .localCheckpoint(eager=True)
+                    # upsampled copies share the doc id; the copy counter
+                    # restores a total order so the budget cut among tied
+                    # copies is deterministic
+                    extra_tiebreak=(copy_col,) if mixture is not None else (),
+                ),
             )
-            labeled.unpersist()
-        out = tick("classifier", out.join(keep_ids, id_col, "left_semi"))
-    if dsir_target is not None:
-        # DSIR targeted selection (operators/dsir.py — Xie et al. 2023
-        # importance resampling): weight every surviving document by
-        # the hashed-n-gram log-likelihood ratio of target over raw,
-        # then keep the top ``dsir_keep`` (int = count, float =
-        # fraction of survivors; one scalar count when fractional).
-        # ``dsir_stochastic`` uses the paper's Gumbel-top-k resampling
-        # (seeded, retry-deterministic) instead of the deterministic
-        # top-k. Ordered after the quality gates — DSIR assumes its
-        # raw pool is already language/quality filtered — and before
-        # decontamination/mixture/budget, which operate on whatever
-        # subset survives selection.
-        from auto_ts_spark.operators.dsir import (
-            dsir_log_weights,
-            gumbel_select,
-            select_top_weighted,
-        )
-
-        wts = dsir_log_weights(
-            out, dsir_target, text_col=text_col, id_col=id_col
-        )
-        if isinstance(dsir_keep, float):
-            if not 0.0 < dsir_keep <= 1.0:
-                raise ValueError(
-                    f"fractional dsir_keep must be in (0, 1], got {dsir_keep!r}"
-                )
-            # the survivor count and the top-k rank below both consume
-            # wts — persist across the two (r13; released right after
-            # the selection's eager internal checkpoint materializes)
-            # so the gram-scoring pass runs once, not twice
-            from pyspark import StorageLevel
-
-            wts = wts.persist(StorageLevel.MEMORY_AND_DISK)
-            n_sel = max(1, int(dsir_keep * wts.count()))
-        else:
-            # bool is an int subclass — dsir_keep=True would silently
-            # mean "keep 1 document"; and a count < 1 empties the
-            # corpus. Both are caller bugs, mirror the fractional check.
-            if isinstance(dsir_keep, bool) or int(dsir_keep) < 1:
-                raise ValueError(
-                    f"integer dsir_keep must be a count >= 1, got {dsir_keep!r}"
-                )
-            n_sel = int(dsir_keep)
-        sel = (
-            gumbel_select(wts, n_sel, id_col=id_col, seed=dsir_seed)
-            if dsir_stochastic
-            else select_top_weighted(wts, n_sel, id_col=id_col)
-        )
-        if isinstance(dsir_keep, float):
-            # the selection's internal rank checkpoint (eager, inside
-            # _top_n_by) is materialized by now — the weight frame's
-            # blocks can go
-            wts.unpersist()
-        out = tick(
-            "dsir", out.join(sel.select(id_col), id_col, "left_semi")
-        )
-    if benchmark is not None:
-        out = tick(
-            "decontaminate",
-            decontaminate(
-                out, benchmark, text_col=text_col, id_col=id_col, n=decontam_n
-            ),
-        )
-    copy_col = "copy_n"
-    if mixture is not None:
-        while copy_col in out.columns:  # don't clobber a caller column
-            copy_col += "_"
-        out = tick(
-            "mixture",
-            mixture_sample(
-                out, mixture, key_col=mixture_key, id_col=id_col,
-                copy_col=copy_col,
-            ),
-        )
-    if token_budget is not None:
-        out = tick(
-            "budget",
-            budget_select(
-                out,
-                token_budget,
-                by=budget_by,
-                priority_col=budget_priority,
-                text_col=text_col,
-                id_col=id_col,
-                # upsampled copies share the doc id; the copy counter
-                # restores a total order so the budget cut among tied
-                # copies is deterministic
-                extra_tiebreak=(copy_col,) if mixture is not None else (),
-            ),
-        )
-    if stage_counts:
-        return out, counts
-    return out
+        if stage_counts:
+            return out, counts
+        return out
 
 
 def curate_stream(

@@ -72,12 +72,3 @@ def score(
     if group_cols:
         return df.groupBy(*group_cols).agg(*aggs)
     return df.agg(*aggs)
-
-
-def weighted_average(df: DataFrame, value_col: str, weight_col: str) -> DataFrame:
-    """A10: ``sum(v*w)/sum(w)`` as a single agg."""
-    return df.agg(
-        (
-            F.sum(F.col(value_col) * F.col(weight_col)) / F.sum(F.col(weight_col))
-        ).alias(f"weighted_{value_col}")
-    )

@@ -92,12 +92,6 @@ def digit_ratio(col: Column) -> Column:
     )
 
 
-def upper_ratio(col: Column) -> Column:
-    return F.length(F.regexp_replace(col, r"[^A-Z]", "")) / F.greatest(
-        F.length(col), F.lit(1)
-    )
-
-
 def stopword_ratio(
     col: Column,
     stopwords: tuple[str, ...] = STOPWORDS_EN,
@@ -255,28 +249,6 @@ def simhash_from_hashes_sql(hash_col_name: str, bits: int = 32) -> str:
         "aggregate("
         f"  transform(sequence(0, {bits - 1}), b -> "
         f"    if(2 * size(filter({hash_col_name}, h -> (h div shiftleft(cast(1 as bigint), b)) % 2 = 1)) > size({hash_col_name}),"
-        "      shiftleft(cast(1 as bigint), b), cast(0 as bigint))),"
-        "  cast(0 as bigint), (acc, x) -> acc + x)"
-    )
-
-
-def simhash_sql(text_col_name: str, bits: int = 32) -> str:
-    """SimHash straight from a text column — CONVENIENCE form only:
-    the token md5 chain is inlined into the voting loop, so it
-    re-executes once per output bit (32× the md5 work at the default
-    width; measured ~11.6 s vs ~1 s staged on 5k docs). Production
-    paths stage ``simhash_token_hashes_sql`` as a column first and
-    vote with ``simhash_from_hashes_sql``. Identical text in DuckDB
-    SQL gives the identical fingerprint (same md5-based hash family).
-    """
-    toks = (
-        f"split(trim(regexp_replace(lower({text_col_name}), '[^a-z0-9]+', ' ')), ' ')"
-    )
-    tok_hashes = simhash_token_hashes_sql(text_col_name)
-    return (
-        "aggregate("
-        f"  transform(sequence(0, {bits - 1}), b -> "
-        f"    if(2 * size(filter({tok_hashes}, h -> (h div shiftleft(cast(1 as bigint), b)) % 2 = 1)) > size({toks}),"
         "      shiftleft(cast(1 as bigint), b), cast(0 as bigint))),"
         "  cast(0 as bigint), (acc, x) -> acc + x)"
     )

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from auto_ts_spark.functions.calendar import add_calendar_features
 from auto_ts_spark.operators.folds import with_row_number
 from auto_ts_spark.operators.lags import supervised_lag_matrix
+from auto_ts_spark.operators.partitioning import MaterializeScope
 
 CAL_FEATURES = ("month", "quarter", "dayofweek", "weekend", "dayofmonth")
 
@@ -140,28 +141,27 @@ def tune_gbt_max_iter(
     small and sequential like the reference's early-stopping sweep.
     """
     feat, feature_cols = build_features(df, target, lags=lags, exog_cols=exog_cols)
-    feat = _per_series_cutoff(feat).cache()
     # same minimum-train gate as cv_scores_ml: series shorter than the
     # holdout + a usable prefix contribute to NEITHER side (otherwise a
     # short series lands entirely in validation, scored by a model that
     # never saw it — or an all-short dataset fits on zero rows)
     min_train = max(10, len(feature_cols))
     cut = F.col("_n") - holdout
-    train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
-    val = feat.filter((F.col("rn") > cut) & (cut >= min_train))
-    if train.limit(1).count() == 0 or val.limit(1).count() == 0:
-        feat.unpersist()
-        return 40, pd.DataFrame(columns=["max_iter", "rmse"])
     rows = []
-    for m in candidates:
-        _, model = fit_gbt(train, feature_cols, target, max_iter=m)
-        assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
-        pred = model.transform(assembler.transform(val))
-        rmse = pred.agg(
-            F.sqrt(F.avg(F.pow(F.col(target) - F.col("prediction"), 2))).alias("r")
-        ).collect()[0]["r"]
-        rows.append({"max_iter": m, "rmse": float(rmse)})
-    feat.unpersist()
+    with MaterializeScope() as scope:
+        feat = scope.hold(_per_series_cutoff(feat))
+        train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
+        val = feat.filter((F.col("rn") > cut) & (cut >= min_train))
+        if train.limit(1).count() == 0 or val.limit(1).count() == 0:
+            return 40, pd.DataFrame(columns=["max_iter", "rmse"])
+        for m in candidates:
+            _, model = fit_gbt(train, feature_cols, target, max_iter=m)
+            assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
+            pred = model.transform(assembler.transform(val))
+            rmse = pred.agg(
+                F.sqrt(F.avg(F.pow(F.col(target) - F.col("prediction"), 2))).alias("r")
+            ).collect()[0]["r"]
+            rows.append({"max_iter": m, "rmse": float(rmse)})
     trials = pd.DataFrame(rows)
     best = int(trials.sort_values(["rmse", "max_iter"]).iloc[0]["max_iter"])
     return best, trials
@@ -214,38 +214,38 @@ def cv_scores_ml(
     the residual source for the ML family's prediction intervals
     (reference build_ml.py:674-680)."""
     feat, feature_cols = build_features(df, target, lags=lags, exog_cols=exog_cols)
-    feat = _per_series_cutoff(feat).cache()
     min_train = max(10, len(feature_cols))
     rows = []
     pred_parts: list[DataFrame] = []
-    for fold in range(n_splits):
-        cut = F.col("_n") - (n_splits - fold) * horizon
-        train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
-        test = feat.filter(
-            (F.col("rn") > cut) & (F.col("rn") <= cut + horizon) & (cut >= min_train)
-        )
-        if train.limit(1).count() == 0:
-            continue
-        assembler, model = fit_gbt(train, feature_cols, target, max_iter=max_iter)
-        pred = model.transform(assembler.transform(test))
-        agg = pred.agg(
-            F.sqrt(F.avg(F.pow(F.col(target) - F.col("prediction"), 2))).alias("rmse"),
-            F.count(F.lit(1)).alias("n"),
-            F.stddev_samp(F.col(target)).alias("sd"),
-        ).collect()[0]
-        sd = float(agg["sd"]) if agg["sd"] else None
-        nrmse = float(agg["rmse"]) / sd if sd else None
-        rows.append(("ml_gbt", fold, float(agg["rmse"]), int(agg["n"]), nrmse))
-        if return_preds:
-            pred_parts.append(
-                pred.select(
-                    "series_id",
-                    "ts",
-                    F.lit(fold).cast("int").alias("fold"),
-                    F.col("prediction").alias("yhat"),
-                )
+    with MaterializeScope() as scope:
+        feat = scope.hold(_per_series_cutoff(feat))
+        for fold in range(n_splits):
+            cut = F.col("_n") - (n_splits - fold) * horizon
+            train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
+            test = feat.filter(
+                (F.col("rn") > cut) & (F.col("rn") <= cut + horizon) & (cut >= min_train)
             )
-    feat.unpersist()
+            if train.limit(1).count() == 0:
+                continue
+            assembler, model = fit_gbt(train, feature_cols, target, max_iter=max_iter)
+            pred = model.transform(assembler.transform(test))
+            agg = pred.agg(
+                F.sqrt(F.avg(F.pow(F.col(target) - F.col("prediction"), 2))).alias("rmse"),
+                F.count(F.lit(1)).alias("n"),
+                F.stddev_samp(F.col(target)).alias("sd"),
+            ).collect()[0]
+            sd = float(agg["sd"]) if agg["sd"] else None
+            nrmse = float(agg["rmse"]) / sd if sd else None
+            rows.append(("ml_gbt", fold, float(agg["rmse"]), int(agg["n"]), nrmse))
+            if return_preds:
+                pred_parts.append(
+                    pred.select(
+                        "series_id",
+                        "ts",
+                        F.lit(fold).cast("int").alias("fold"),
+                        F.col("prediction").alias("yhat"),
+                    )
+                )
     summary = pd.DataFrame(rows, columns=["model", "fold", "rmse", "n_test", "nrmse"])
     if not return_preds:
         return summary
@@ -276,30 +276,30 @@ def cv_scores_ml_classifier(
     feat = _per_series_cutoff(feat)
     # balanced class weights n/(k·count) — the A12 operator (profile.py)
     wmap = class_weights(feat, target).select(target, F.col("weight").alias("_w"))
-    feat = feat.join(F.broadcast(wmap), target, "left").cache()
-    n_classes = wmap.count()
     min_train = max(10, len(feature_cols))
     rows = []
-    for fold in range(n_splits):
-        cut = F.col("_n") - (n_splits - fold) * horizon
-        train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
-        test = feat.filter(
-            (F.col("rn") > cut) & (F.col("rn") <= cut + horizon) & (cut >= min_train)
-        )
-        if train.limit(1).count() == 0:
-            continue
-        assembler, model = fit_classifier(
-            train, feature_cols, target, n_classes=n_classes, weight_col="_w"
-        )
-        pred = model.transform(assembler.transform(test))
-        agg = pred.agg(
-            F.avg((F.col(target) != F.col("prediction")).cast("double")).alias("err"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        rows.append(
-            ("ml_gbt_classifier", fold, float(agg["err"]), int(agg["n"]), None)
-        )
-    feat.unpersist()
+    with MaterializeScope() as scope:
+        feat = scope.hold(feat.join(F.broadcast(wmap), target, "left"))
+        n_classes = wmap.count()
+        for fold in range(n_splits):
+            cut = F.col("_n") - (n_splits - fold) * horizon
+            train = feat.filter((F.col("rn") <= cut) & (cut >= min_train))
+            test = feat.filter(
+                (F.col("rn") > cut) & (F.col("rn") <= cut + horizon) & (cut >= min_train)
+            )
+            if train.limit(1).count() == 0:
+                continue
+            assembler, model = fit_classifier(
+                train, feature_cols, target, n_classes=n_classes, weight_col="_w"
+            )
+            pred = model.transform(assembler.transform(test))
+            agg = pred.agg(
+                F.avg((F.col(target) != F.col("prediction")).cast("double")).alias("err"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()[0]
+            rows.append(
+                ("ml_gbt_classifier", fold, float(agg["err"]), int(agg["n"]), None)
+            )
     return pd.DataFrame(rows, columns=["model", "fold", "rmse", "n_test", "nrmse"])
 
 

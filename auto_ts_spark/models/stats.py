@@ -130,12 +130,6 @@ def adf_test(
     }
 
 
-def adf_statistic(
-    y: np.ndarray, max_lag: int | None = None, autolag: str | None = "aic"
-) -> float:
-    return adf_test(y, max_lag, autolag)["stat"]
-
-
 def is_stationary(y: np.ndarray, alpha: str = "5%") -> bool:
     res = adf_test(y)
     if alpha == "5%":

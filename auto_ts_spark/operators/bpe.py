@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from auto_ts_spark.functions import text as TX
+from auto_ts_spark.operators.partitioning import MaterializeScope
 
 END = "</w>"
 
@@ -221,9 +222,10 @@ def train_bpe(
     histogram you keep — ``max_words`` is the lever: memory scales with
     kept words × average word length, NOT with corpus size (the corpus
     contributes exactly one distributed histogram pass)."""
-    hist = word_histogram(df, text_col=text_col).filter(F.col("cnt") >= min_count)
-    hist = hist.persist()
-    try:
+    with MaterializeScope() as scope:
+        hist = scope.hold(
+            word_histogram(df, text_col=text_col).filter(F.col("cnt") >= min_count)
+        )
         totals = hist.agg(
             F.count(F.lit(1)).alias("n_words"), F.sum("cnt").alias("mass")
         ).collect()[0]
@@ -233,8 +235,6 @@ def train_bpe(
             .limit(max_words)
             .collect()
         )
-    finally:
-        hist.unpersist()
     words = [(r["word"], int(r["cnt"])) for r in top]
     kept_mass = sum(c for _, c in words)
     merges = _driver_bpe(words, n_merges, min_pair_count)
@@ -308,12 +308,4 @@ def bpe_tokenize(
     toks = F.filter(TX.tokens(F.col(text_col)), lambda t: t != "")
     return df.withColumn(out_col, encode(toks)).withColumn(
         "n_bpe_real", F.size(F.col(out_col))
-    )
-
-
-def merges_df(spark, merges: list[tuple[str, str]]) -> DataFrame:
-    """Materialize a merge table as (rank, left, right) for sinks/joins."""
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank int, left string, right string",
     )

@@ -59,8 +59,8 @@ def _ordered_cumsum_global(
     check is woven into the cumsum column itself (``assert_true``
     guarding the projection) so column pruning cannot elide it.
 
-    The slice-cumsum intermediate is ``localCheckpoint``-ed, not
-    cached: range-boundary sampling and ``spark_partition_id`` are not
+    The slice-cumsum intermediate is checkpointed, not cached:
+    range-boundary sampling and ``spark_partition_id`` are not
     recompute-stable, so a cached block lost after the offsets were
     collected could recompute under SHIFTED slice ids and silently
     corrupt the prefix sums. A checkpoint truncates lineage — a lost
@@ -68,7 +68,7 @@ def _ordered_cumsum_global(
     storage is released by the ContextCleaner once the result frame is
     unreferenced, so repeated calls do not pin corpora for the session
     lifetime the way an explicit never-unpersisted cache would."""
-    from auto_ts_spark.operators.partitioning import shuffle_partitions
+    from auto_ts_spark.operators.partitioning import checkpoint, shuffle_partitions
 
     spark = df.sparkSession
     n_part = shuffle_partitions(spark)
@@ -90,7 +90,7 @@ def _ordered_cumsum_global(
         # otherwise-branch is unreachable; wrapping keeps the check
         # inside the one column every consumer reads
         lcum = F.when(check.isNull(), lcum).otherwise(lcum)
-    local = parted.withColumn("_lcum", lcum).localCheckpoint(eager=True)
+    local = checkpoint(parted.withColumn("_lcum", lcum))
     totals = {
         r["_pid"]: num(r["t"] if r["t"] is not None else 0)
         for r in local.groupBy("_pid").agg(F.sum(value_col).alias("t")).collect()

@@ -319,21 +319,6 @@ def _driver_union_find(rows, id_type, spark, stats):
     return spark.createDataFrame(out, schema)
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a ``localCheckpoint``'s persisted blocks NOW instead of at
-    some future GC. ``DataFrame.unpersist()`` cannot do it: it routes
-    through the CacheManager, which never registered the checkpoint
-    RDD (measured: getRDDStorageInfo unchanged after the call). The
-    block-holding RDD lives inside the plan's ``LogicalRDD`` node;
-    non-checkpointed plans (or API drift) fall through harmlessly —
-    the ContextCleaner still reclaims on GC, this just makes the
-    release deterministic for bounded-memory loops."""
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def connected_components(
     pairs: DataFrame,
     *,
@@ -390,107 +375,111 @@ def connected_components(
     key) — so scale probes can confirm convergence stays flat as the
     corpus grows.
     """
-    half = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # cache (not checkpoint): edges are a pure map of the input, so a
-    # lost block recomputes deterministically, and the explicit
-    # unpersist below releases the memory as soon as the loop ends
-    edges = half.unionByName(
-        half.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
-    # ONE probe job decides the strategy AND, when small, already IS
-    # the collect (r13 — the previous count-then-collect pair cost an
-    # extra full job barrier per CC call): limit past the doubled cap
-    # returns every row iff the graph is within the union-find budget.
-    # On a big graph the incremental take stops after a few partitions
-    # and the work is not wasted — the computed partitions land in the
-    # edge cache the propagation loop reads anyway. Doubled directions
-    # are harmless to union-find. Driver-cost note (r13 advisor): on
-    # the BIG-graph path this probe transiently collects up to
-    # 2*driver_max_edges+2 slim (a, b) rows (~tens of MB at the 500k
-    # default) that the old count-based probe did not; that is inside
-    # the same documented driver budget the union-find path already
-    # commits to, and it is released as soon as the length check
-    # fails. If driver pressure ever shows up at 100TB-regime edge
-    # counts, probe with a count + LocalLimit instead.
-    cap_rows = 2 * driver_max_edges
-    probe = edges.limit(cap_rows + 2).collect()
-    if len(probe) <= cap_rows:
-        rows = [(r["a"], r["b"]) for r in probe]
-        id_type = pairs.schema[src].dataType
-        out = _driver_union_find(rows, id_type, pairs.sparkSession, stats)
-        edges.unpersist()
-        return out
-    # round 1 folded into init: label = min(id, neighbors) — the
-    # edge list carries both directions so every node appears as "a".
-    # SERIALIZED checkpoint blocks (PySpark's MEMORY_AND_DISK level):
-    # the localCheckpoint default builds DESERIALIZED heap rows, and a
-    # 40M-node label generation as Java objects is several GB — the
-    # r13 50M-edge probe OOMed an 8g heap mid-round even with the
-    # generation release below (same class as the r7 quality-classifier
-    # fix); serialized blocks unroll incrementally and spill to disk.
     from pyspark import StorageLevel
 
-    labels = (
-        edges.groupBy(F.col("a").alias("id"))
-        .agg(F.min("b").alias("nbr"))
-        .select("id", F.least("id", "nbr").alias("label"))
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    ckpt = labels  # handle to the checkpointed generation (see below)
-    rounds = 1  # the init-folded first propagation
-    for _ in range(max_iter - 1):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("id").alias("a"), F.col("label").alias("al")),
-                "a",
+    from auto_ts_spark.operators.partitioning import MaterializeScope
+
+    half = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    with MaterializeScope() as scope:
+        # persist (not checkpoint): edges are a pure map of the input,
+        # so a lost block recomputes deterministically; released when
+        # the scope exits
+        edges = scope.hold(
+            half.unionByName(
+                half.select(F.col("b").alias("a"), F.col("a").alias("b"))
             )
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("al").alias("nbr"))
         )
-        # pointer jump: ℓ(ℓ(v)). ℓ(v) is always the id of a node in
-        # v's component with ℓ(w) ≤ w, so taking the min with the
-        # label's own label is safe (stays in-component, monotone
-        # non-increasing) and halves the remaining path to the
-        # component min each round — O(log diameter) convergence.
-        jump = labels.select(
-            F.col("id").alias("_jid"), F.col("label").alias("_jl")
+        # ONE probe job decides the strategy AND, when small, already
+        # IS the collect (r13 — the previous count-then-collect pair
+        # cost an extra full job barrier per CC call): limit past the
+        # doubled cap returns every row iff the graph is within the
+        # union-find budget. On a big graph the incremental take stops
+        # after a few partitions and the work is not wasted — the
+        # computed partitions land in the edge cache the propagation
+        # loop reads anyway. Doubled directions are harmless to
+        # union-find. Driver-cost note (r13 advisor): on the BIG-graph
+        # path this probe transiently collects up to
+        # 2*driver_max_edges+2 slim (a, b) rows (~tens of MB at the
+        # 500k default) that the old count-based probe did not; that
+        # is inside the same documented driver budget the union-find
+        # path already commits to, and it is released as soon as the
+        # length check fails. If driver pressure ever shows up at
+        # 100TB-regime edge counts, probe with a count + LocalLimit
+        # instead.
+        cap_rows = 2 * driver_max_edges
+        probe = edges.limit(cap_rows + 2).collect()
+        if len(probe) <= cap_rows:
+            rows = [(r["a"], r["b"]) for r in probe]
+            id_type = pairs.schema[src].dataType
+            return _driver_union_find(rows, id_type, pairs.sparkSession, stats)
+        # round 1 folded into init: label = min(id, neighbors) — the
+        # edge list carries both directions so every node appears as
+        # "a". SERIALIZED checkpoint blocks (PySpark's MEMORY_AND_DISK
+        # level): the localCheckpoint default builds DESERIALIZED heap
+        # rows, and a 40M-node label generation as Java objects is
+        # several GB — the r13 50M-edge probe OOMed an 8g heap
+        # mid-round even with the generation release below (same class
+        # as the r7 quality-classifier fix); serialized blocks unroll
+        # incrementally and spill to disk.
+        level = StorageLevel.MEMORY_AND_DISK
+        ckpt = scope.checkpoint(
+            edges.groupBy(F.col("a").alias("id"))
+            .agg(F.min("b").alias("nbr"))
+            .select("id", F.least("id", "nbr").alias("label")),
+            level,
         )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .join(jump, F.col("label") == F.col("_jid"), "left")
-            .select(
-                "id",
-                F.col("label").alias("prev"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce("nbr", F.col("label")),
-                    F.coalesce("_jl", F.col("label")),
-                ).alias("label"),
+        labels = ckpt
+        rounds = 1  # the init-folded first propagation
+        for _ in range(max_iter - 1):
+            nbr_min = (
+                edges.join(
+                    labels.select(F.col("id").alias("a"), F.col("label").alias("al")),
+                    "a",
+                )
+                .groupBy(F.col("b").alias("id"))
+                .agg(F.min("al").alias("nbr"))
             )
-            .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
-        )
-        # change probe scans the just-checkpointed frame — no join job
-        changed = (
-            new_labels.filter(F.col("label") != F.col("prev")).limit(1).count()
-        )
-        # Release the PREVIOUS generation's checkpoint blocks now that
-        # the new one is materialized (localCheckpoint is eager, and
-        # the change probe above already scanned it). Without this
-        # every round's full label frame stays pinned in storage
-        # memory for the life of the loop — rounds × |V| rows, which
-        # the r13 50M-edge decade probe measured as an 8g heap OOM
-        # mid-loop, while true peak state is only ever TWO generations
-        # + the edge cache. NOTE DataFrame.unpersist() is a NO-OP here
-        # (it routes through the CacheManager, which never saw the
-        # checkpoint RDD — verified via getRDDStorageInfo), hence the
-        # RDD-level release.
-        _release_local_checkpoint(ckpt)
-        ckpt = new_labels
-        labels = new_labels.select("id", "label")
-        rounds += 1
-        if changed == 0:
-            break
-    edges.unpersist()
+            # pointer jump: ℓ(ℓ(v)). ℓ(v) is always the id of a node in
+            # v's component with ℓ(w) ≤ w, so taking the min with the
+            # label's own label is safe (stays in-component, monotone
+            # non-increasing) and halves the remaining path to the
+            # component min each round — O(log diameter) convergence.
+            jump = labels.select(
+                F.col("id").alias("_jid"), F.col("label").alias("_jl")
+            )
+            new_labels = scope.checkpoint(
+                labels.join(nbr_min, "id", "left")
+                .join(jump, F.col("label") == F.col("_jid"), "left")
+                .select(
+                    "id",
+                    F.col("label").alias("prev"),
+                    F.least(
+                        F.col("label"),
+                        F.coalesce("nbr", F.col("label")),
+                        F.coalesce("_jl", F.col("label")),
+                    ).alias("label"),
+                ),
+                level,
+            )
+            # change probe scans the just-checkpointed frame — no join job
+            changed = (
+                new_labels.filter(F.col("label") != F.col("prev")).limit(1).count()
+            )
+            # Release the PREVIOUS generation's checkpoint blocks now
+            # that the new one is materialized (the checkpoint is
+            # eager, and the change probe above already scanned it).
+            # Without this every round's full label frame stays held
+            # in storage memory for the life of the loop — rounds × |V|
+            # rows, which the r13 50M-edge decade probe measured as an
+            # 8g heap OOM mid-loop, while true peak state is only ever
+            # TWO generations + the edge cache. The last generation is
+            # the result's: the scope leaves it to the ContextCleaner.
+            scope.release(ckpt)
+            ckpt = new_labels
+            labels = new_labels.select("id", "label")
+            rounds += 1
+            if changed == 0:
+                break
     if stats is not None:
         stats["rounds"] = rounds
     return labels.select("id", F.col("label").alias("cluster_id"))

@@ -174,10 +174,6 @@ def _top_n_by(weights: DataFrame, key: Column, n: int, id_col: str) -> DataFrame
         order_col="_ord",
         series_col="_series",
         name="_rn",
-        # single consumer (this filter): skip the O(n) result cache —
-        # the selection recomputes from the internal rank checkpoint,
-        # so repeated curate(dsir_target=…) calls pin nothing
-        pin_result=False,
     )
     return ranked.filter(F.col("_rn") <= n).drop("_series", "_ord", "_rn")
 

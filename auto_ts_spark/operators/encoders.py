@@ -53,22 +53,23 @@ def distributed_rank(
     partition offset + local rank — identical to the global sorted
     rank, with every heavy stage distributed.
     """
-    from auto_ts_spark.operators.partitioning import shuffle_partitions
+    from auto_ts_spark.operators.partitioning import checkpoint, shuffle_partitions
 
     spark = vals.sparkSession
     n_part = shuffle_partitions(spark)
     parted = vals.repartitionByRange(n_part, F.col(col)).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # localCheckpoint, not cache: range-boundary sampling and
+    # checkpoint, not cache: range-boundary sampling and
     # spark_partition_id are not recompute-stable, so a cached block
     # lost AFTER the counts were collected could recompute under
     # shifted _pid assignment and silently join stale offsets; a
-    # checkpoint truncates lineage (lost block = loud failure) and is
-    # freed by the ContextCleaner when unreferenced
-    local = parted.withColumn(
-        "_lrank", F.row_number().over(Window.partitionBy("_pid").orderBy(col))
-    ).localCheckpoint(eager=True)
+    # checkpoint truncates lineage (lost block = loud failure)
+    local = checkpoint(
+        parted.withColumn(
+            "_lrank", F.row_number().over(Window.partitionBy("_pid").orderBy(col))
+        )
+    )
     counts = {
         r["_pid"]: r["c"]
         for r in local.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
@@ -88,7 +89,7 @@ def distributed_rank(
     # intermediate above, so the ContextCleaner can free those blocks
     # as soon as this function returns instead of pinning
     # corpus-sized storage for as long as the mapping lives
-    return out_df.localCheckpoint(eager=True)
+    return checkpoint(out_df)
 
 
 # mapping-side join strategy cutover: a label mapping is usually a

@@ -103,17 +103,3 @@ def sliding_folds(
         ),
     ).filter(F.col("role").isNotNull())
     return out.drop("_n")
-
-
-def train_test_split_by_position(
-    df: DataFrame,
-    train_rows: int,
-    *,
-    order_col: str = "ts",
-    series_col: str = "series_id",
-) -> tuple[DataFrame, DataFrame]:
-    """First-n / rest positional split (reference's 40/8 contract, P8)."""
-    dfn = with_row_number(df, order_col=order_col, series_col=series_col)
-    train = dfn.filter(F.col("rn") <= train_rows).drop("rn")
-    test = dfn.filter(F.col("rn") > train_rows).drop("rn")
-    return train, test

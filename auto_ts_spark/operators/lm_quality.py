@@ -54,6 +54,8 @@ from pyspark.sql import functions as F
 
 from auto_ts_spark.functions.text import tokens
 from auto_ts_spark.operators.partitioning import (
+    MaterializeScope,
+    checkpoint,
     ensure_parallelism,
     with_global_row_number,
 )
@@ -90,28 +92,6 @@ class NgramLM:
     n_tokens: int
     vocab: int
     n_bigrams: int
-    # the frames actually pinned by train_ngram_lm (r13: one combined
-    # (kind, gram) count table rather than uni+bi separately); release
-    # unpersists these. Default covers hand-built LMs.
-    pinned: tuple = ()
-
-    def release(self) -> None:
-        """Unpersist the cached count table(s) (train_ngram_lm pins
-        them with ``.cache()`` for their multiple scoring-side
-        consumers). Call once every scoring pass reading this LM has
-        been materialized; a session that trains several reference LMs
-        and never releases them accumulates O(vocab + bigrams) cached
-        blocks per LM. Using the LM after release stays correct — the
-        tables recompute from the reference plan — just slower."""
-        for t in self.pinned or (self.uni, self.bi):
-            t.unpersist()
-
-    def __enter__(self) -> "NgramLM":
-        return self
-
-    def __exit__(self, *exc) -> bool:
-        self.release()
-        return False
 
 
 def _doc_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -131,20 +111,30 @@ def _bigram_strings(tk: Column) -> Column:
 
 
 def train_ngram_lm(
-    ref: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
+    ref: DataFrame,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    scope: MaterializeScope | None = None,
 ) -> NgramLM:
     """Fit the bigram stupid-backoff LM on the reference corpus.
 
     Two groupBys (map-side combined) and two scalar aggregates; at any
     reference size the result is a pair of count tables a curation run
     broadcasts once.
+
+    The count table both LM tables derive from is held for its
+    several consumers: persisted in ``scope`` when given (released
+    when the caller's scope exits — materialize every scoring pass
+    before that), else eagerly checkpointed, its blocks owned by the
+    returned LM.
     """
     toks = _doc_tokens(ref, text_col, id_col)
     tk = F.col("_tk")
     # ONE pass over the reference (r13 — separate uni/bi groupBys each
     # re-scanned and re-tokenized the whole reference): unigrams and
     # bigrams ride one explode as (kind, gram) structs into one
-    # map-side-combined count table, cached for its three consumers
+    # map-side-combined count table, held for its three consumers
     # (totals aggregate, cur-side lookup, prev-side lookup + bigram
     # table). O(reference vocabulary + bigrams) memory, same as the
     # two tables it replaces.
@@ -159,9 +149,9 @@ def train_ngram_lm(
         .select(F.col("kg.k").alias("k"), F.col("kg.g").alias("g"))
         .groupBy("k", "g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
     )
-    # one scalar job over the cached table replaces the r12 pair of
+    counts = scope.hold(counts) if scope is not None else checkpoint(counts)
+    # one scalar job over the held table replaces the r12 pair of
     # jobs (uni totals collect + bi.count): n_bigrams pre-join equals
     # n_bigrams post-join because every bigram's history token is by
     # construction in the same corpus's vocabulary (inner join on
@@ -199,7 +189,6 @@ def train_ngram_lm(
         n_tokens=n_tokens,
         vocab=vocab,
         n_bigrams=n_bigrams,
-        pinned=(counts,),
     )
 
 
@@ -288,36 +277,28 @@ def perplexity_tercile_assign(
 
     The scored frame is persisted across the two consumers here (the
     scalar count and the rank's range repartition) and released before
-    returning: without the pin each consumer re-ran the WHOLE scoring
-    pass — corpus tokenize, LM joins, per-doc aggregate — once (r13,
-    guide §1.2: remove repeated passes). The release is safe because
-    with_global_row_number eagerly localCheckpoints its
-    range-partitioned input, cutting the returned frame's lineage
-    above ``scored``.
+    returning: without it each consumer re-ran the WHOLE scoring pass
+    — corpus tokenize, LM joins, per-doc aggregate — once (r13, guide
+    §1.2: remove repeated passes). The release is safe because
+    with_global_row_number eagerly checkpoints its range-partitioned
+    input, cutting the returned frame's lineage above ``scored``.
     """
     from pyspark import StorageLevel
 
-    pinned = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        n = pinned.count()
+    with MaterializeScope() as scope:
+        scored = scope.hold(scored, StorageLevel.MEMORY_AND_DISK)
+        n = scored.count()
         base, rem = divmod(n, 3)
         cut1 = base + (1 if rem >= 1 else 0)
         cut2 = cut1 + base + (1 if rem >= 2 else 0)
         ranked = with_global_row_number(
-            pinned.withColumn("_series", F.lit("all")).withColumn(
+            scored.withColumn("_series", F.lit("all")).withColumn(
                 "_ord", F.struct(F.col("avg_nlp"), F.col(id_col))
             ),
             order_col="_ord",
             series_col="_series",
             name="_rn",
-            # single-pass consumers (bucket filter / tercile groupBy):
-            # skip the O(n) result cache — the bucket projection
-            # recomputes from the internal rank checkpoint, so repeated
-            # curate(perplexity_ref=…) calls pin no rank frame
-            pin_result=False,
         )
-    finally:
-        pinned.unpersist()
     bucket = (
         F.when(F.col("_rn") <= F.lit(cut1), F.lit("head"))
         .when(F.col("_rn") <= F.lit(cut2), F.lit("middle"))

@@ -10,12 +10,24 @@ scale-safe version of that: it only ever repartitions *up* to the
 cluster's parallelism, so on a real cluster with ample input splits it
 is a no-op, while on local fixtures it unlocks all cores for the
 compute-bound stage that follows.
+
+This module also holds the engine's materialization policy, and is the
+only library module that persists, caches or checkpoints a frame
+(``auto.py``'s fitted-model state aside): ``cache_if_costly`` (the
+size-gated cache), :func:`checkpoint` (an eager checkpoint whose
+blocks belong to the caller's result) and :class:`MaterializeScope`
+(frames held for reuse inside one call, released when it returns or
+raises).
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def shuffle_partitions(spark) -> int:
@@ -55,11 +67,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 # Same zero-job sizeInBytes gate as textops.SPAN_REPARTITION_MIN_BYTES.
 CACHE_INPUT_MIN_BYTES = 256 * 1024 * 1024
 
-# one-shot flag: cache_if_costly warns the first time its zero-job
-# size probe breaks (see the except branch) instead of silently
-# degrading to unconditional caching
-_SIZE_PROBE_WARNED = False
-
 
 def cache_if_costly(df: DataFrame, input_df: DataFrame) -> DataFrame:
     """``df.cache()`` only when recomputing ``df`` would re-read a
@@ -69,7 +76,7 @@ def cache_if_costly(df: DataFrame, input_df: DataFrame) -> DataFrame:
     source every extra branch is a full re-scan — cache; on a small
     source the recompute is cheaper than the InMemoryRelation
     round-trip — don't. Stats unavailable → cache (the scale-safe
-    default)."""
+    default), logged so a broken probe is visible."""
     try:
         raw = (
             input_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -77,24 +84,91 @@ def cache_if_costly(df: DataFrame, input_df: DataFrame) -> DataFrame:
         size = int(raw if isinstance(raw, int) else raw.toString())
         if size < CACHE_INPUT_MIN_BYTES:
             return df
-    except Exception:
-        # advisor item (r13): a silently-broken size probe (e.g. a
-        # PySpark internal-API change) would invisibly re-introduce the
-        # unconditional-cache small-scan regression the gate was built
-        # to prevent — warn once so it is observable, then keep the
-        # scale-safe always-cache fallback.
-        global _SIZE_PROBE_WARNED
-        if not _SIZE_PROBE_WARNED:
-            _SIZE_PROBE_WARNED = True
-            import warnings
-
-            warnings.warn(
-                "cache_if_costly: optimizedPlan().stats() size probe "
-                "failed; falling back to unconditional cache",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+    except Exception as exc:
+        # a silently-broken size probe (e.g. a PySpark internal-API
+        # change) would invisibly re-introduce the unconditional-cache
+        # small-scan regression the gate was built to prevent
+        log.warning(
+            "cache_if_costly: optimizedPlan().stats() size probe failed "
+            "(%s); falling back to unconditional cache",
+            exc,
+        )
     return df.cache()
+
+
+def checkpoint(df: DataFrame, level=None) -> DataFrame:
+    """Eager ``localCheckpoint``: materialize ``df`` now and cut its
+    lineage. For frames whose blocks belong to the frame the caller
+    returns: nothing releases them explicitly, the ContextCleaner
+    frees them once the returned frame is garbage. ``level`` (a
+    ``StorageLevel``; default the deserialized localCheckpoint level)
+    — pass ``MEMORY_AND_DISK`` for large frames, whose serialized
+    blocks spill instead of filling the heap."""
+    return df.localCheckpoint(eager=True, storageLevel=level)
+
+
+def _release(df: DataFrame, checkpointed: bool) -> None:
+    if checkpointed:
+        # DataFrame.unpersist() is a no-op for a checkpoint: it goes
+        # through the CacheManager, which never registered it. The
+        # blocks belong to the RDD inside the plan's LogicalRDD.
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+    else:
+        df.unpersist()
+
+
+class MaterializeScope:
+    """Owns the frames a call materializes for its own reuse and
+    releases them when the ``with`` block exits, whether it returns or
+    raises::
+
+        with MaterializeScope() as scope:
+            feat = scope.hold(build(df))
+            ...  # every action reading feat
+
+    ``hold`` persists lazily and is always released on exit: a frame
+    the caller's result still references afterwards recomputes from
+    its lineage (correct, just slower). ``checkpoint`` is eager
+    (:func:`checkpoint`); its blocks are released on exit only when
+    the block raises — on a normal exit they belong to the result and
+    the ContextCleaner frees them. Checkpointing a frame this scope
+    already checkpointed returns it unchanged. ``release`` frees one
+    held frame early.
+    """
+
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame, bool]] = []
+
+    def __enter__(self) -> "MaterializeScope":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> bool:
+        held, self._held = self._held, []
+        for df, checkpointed in reversed(held):
+            if exc_type is not None or not checkpointed:
+                _release(df, checkpointed)
+        return False
+
+    def hold(self, df: DataFrame, level=None) -> DataFrame:
+        """Lazily persist ``df`` (``level``: a ``StorageLevel``;
+        default that of ``DataFrame.cache()``)."""
+        out = df.cache() if level is None else df.persist(level)
+        self._held.append((out, False))
+        return out
+
+    def checkpoint(self, df: DataFrame, level=None) -> DataFrame:
+        if any(df is h and c for h, c in self._held):
+            return df
+        out = checkpoint(df, level)
+        self._held.append((out, True))
+        return out
+
+    def release(self, df: DataFrame) -> None:
+        for i, (h, checkpointed) in enumerate(self._held):
+            if h is df:
+                del self._held[i]
+                _release(h, checkpointed)
+                return
 
 
 def bounded_window_key(col: str):
@@ -138,7 +212,6 @@ def with_global_row_number(
     order_col: str = "ts",
     series_col: str = "series_id",
     name: str = "_grn",
-    pin_result: bool = True,
 ) -> DataFrame:
     """Per-series global row number WITHOUT a per-series single-task
     window — the enabler for sharding one giant series across cores.
@@ -152,14 +225,10 @@ def with_global_row_number(
     small series should use the ordinary per-series window, which
     already distributes.
 
-    ``pin_result=False`` skips the result cache for single-consumer
-    callers (a top-n filter, a tercile bucket assignment): the result
-    stays a cheap deterministic join over the internally checkpointed
-    rank frame (the checkpoint is what guarantees offsets and rows see
-    the same partition assignment — that never depends on pinning), so
-    nothing O(n) stays pinned after the caller's one pass. Default
-    True preserves the multi-consumer contract; those callers should
-    ``.unpersist()`` the returned frame when done.
+    The result is lazy: a cheap join of the internally checkpointed
+    rank frame with broadcast offsets, so every consumer recomputes the
+    same numbering; callers reading it several times hold it in their
+    own :class:`MaterializeScope`.
     """
     from pyspark.sql import Window
 
@@ -168,19 +237,20 @@ def with_global_row_number(
     parted = df.repartitionByRange(
         n_part, F.col(series_col), F.col(order_col)
     ).withColumn("_pid", F.spark_partition_id())
-    # localCheckpoint (not cache) before the counts collect: the
+    # eager checkpoint (not cache) before the counts collect: the
     # offsets and the final join must see the SAME range-partition
     # assignment, and boundary sampling / spark_partition_id are not
     # recompute-stable — a cached block lost after the collect could
     # silently recompute under shifted _pid; the checkpoint truncates
-    # lineage (lost block = loud failure, never a wrong answer) and is
-    # freed by the ContextCleaner once unreferenced
-    local = parted.withColumn(
-        "_lrank",
-        F.row_number().over(
-            Window.partitionBy("_pid", series_col).orderBy(order_col)
-        ),
-    ).localCheckpoint(eager=True)
+    # lineage (lost block = loud failure, never a wrong answer)
+    local = checkpoint(
+        parted.withColumn(
+            "_lrank",
+            F.row_number().over(
+                Window.partitionBy("_pid", series_col).orderBy(order_col)
+            ),
+        )
+    )
     counts = (
         local.groupBy("_pid", series_col)
         .agg(F.count(F.lit(1)).alias("c"))
@@ -196,21 +266,11 @@ def with_global_row_number(
         [(pid, sid, off) for (pid, sid), off in offsets.items()],
         f"_pid int, {series_col} string, _off long",
     )
-    out = (
+    return (
         local.join(F.broadcast(off_df), ["_pid", series_col])
         .withColumn(name, F.col("_off") + F.col("_lrank"))
         .drop("_pid", "_lrank", "_off")
     )
-    if pin_result:
-        # pin the RESULT (which downstream reuses). NOTE: the
-        # checkpointed intermediate stays pinned while the cached
-        # result's plan references it — storage cost for
-        # recompute-safety (a silently corrupted rank is worse than
-        # held blocks). Callers should .unpersist() the returned frame
-        # when done; the ContextCleaner then frees the checkpoint too
-        out = out.cache()
-        out.count()
-    return out
 
 
 def shard_series(
@@ -230,7 +290,9 @@ def shard_series(
 
     This is the time-bucket shard + boundary splice promised in
     lags.py's scale notes: one giant series becomes
-    ceil(n / shard_rows) independent tasks instead of one.
+    ceil(n / shard_rows) independent tasks instead of one. Both
+    branches read the row numbering lazily; it recomputes from the
+    numbering's internal checkpoint, so nothing stays held.
     """
     if context_rows >= shard_rows:
         raise ValueError("shard_rows must exceed context_rows")

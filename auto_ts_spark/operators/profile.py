@@ -211,34 +211,34 @@ def exact_quantiles(
     """
     import math
 
-    from .partitioning import with_global_row_number
+    from .partitioning import MaterializeScope, with_global_row_number
 
     vals = (
         df.select(F.col(value_col).cast("double").alias("_v"))
         .filter(F.col("_v").isNotNull())
         .withColumn("_s", F.lit("0"))
     )
-    ranked = with_global_row_number(
-        vals, order_col="_v", series_col="_s", name="_r"
-    )
-    n = ranked.count()
-    if n == 0:
-        return {q: None for q in probabilities}
-    need = sorted(
-        {
-            r
-            for q in probabilities
-            for r in (
-                math.floor((n - 1) * q) + 1,
-                math.ceil((n - 1) * q) + 1,
-            )
+    with MaterializeScope() as scope:
+        ranked = scope.hold(
+            with_global_row_number(vals, order_col="_v", series_col="_s", name="_r")
+        )
+        n = ranked.count()
+        if n == 0:
+            return {q: None for q in probabilities}
+        need = sorted(
+            {
+                r
+                for q in probabilities
+                for r in (
+                    math.floor((n - 1) * q) + 1,
+                    math.ceil((n - 1) * q) + 1,
+                )
+            }
+        )
+        picked = {
+            row["_r"]: row["_v"]
+            for row in ranked.filter(F.col("_r").isin(need)).collect()
         }
-    )
-    picked = {
-        row["_r"]: row["_v"]
-        for row in ranked.filter(F.col("_r").isin(need)).collect()
-    }
-    ranked.unpersist()
     out: dict[float, float | None] = {}
     for q in probabilities:
         k = (n - 1) * q

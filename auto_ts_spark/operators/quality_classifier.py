@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from auto_ts_spark.functions.text import hash60, tokens
-from auto_ts_spark.operators.partitioning import ensure_parallelism
+from auto_ts_spark.operators.partitioning import MaterializeScope, ensure_parallelism
 
 UNIT = 1_000_000  # fixed-point scale: 1 unit = 1e-6
 
@@ -149,6 +149,28 @@ def _p_u(z_u: Column) -> Column:
     return _q(p)
 
 
+def labeled_features(
+    docs: DataFrame,
+    label: Column,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_buckets: int = 128,
+) -> DataFrame:
+    """:func:`hashed_features` joined with the 0/1 ``label``:
+    ``(id, bucket, x_u, y)`` — the table every training iteration
+    reads. Callers that also score the same documents build it
+    themselves, persist it (serialized ``MEMORY_AND_DISK``) in their
+    :class:`MaterializeScope`, and pass it both to
+    :func:`train_quality_classifier` and — filtered to the documents
+    to score — to :func:`classify` as ``features``: one
+    tokenize→hash→aggregate pass instead of two."""
+    y = docs.select(F.col(id_col).alias("id"), label.cast("int").alias("y"))
+    return hashed_features(
+        docs, text_col=text_col, id_col=id_col, n_buckets=n_buckets
+    ).join(y, "id")
+
+
 def train_quality_classifier(
     docs: DataFrame,
     label: Column,
@@ -159,8 +181,7 @@ def train_quality_classifier(
     iters: int = 3,
     lr: float = 1.0,
     features: DataFrame | None = None,
-    return_features: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Fit the hashed-n-gram logistic classifier; returns the weight
     table ``(bucket, w_u)`` (micro-units, bigint) after ``iters``
     full-batch gradient steps ``w <- w - lr * grad / n_docs`` from
@@ -168,58 +189,40 @@ def train_quality_classifier(
 
     ``label`` is a boolean Column over ``docs`` (1 = reference-like).
     Documents with zero tokens carry no features and drop out of the
-    fit. The labeled feature table is materialized once (SERIALIZED
-    memory-and-disk persist) and reused by every iteration, then
-    released before returning (PySpark's MEMORY_AND_DISK is the
-    serialized level; _DESER is the localCheckpoint default). r7 scale
-    fix: the earlier
-    ``localCheckpoint(eager=True)`` built DESERIALIZED heap blocks —
+    fit. The :func:`labeled_features` table is materialized once
+    (SERIALIZED memory-and-disk persist) and reused by every
+    iteration, then released before returning (PySpark's
+    MEMORY_AND_DISK is the serialized level; _DESER is the
+    localCheckpoint default). r7 scale fix: the earlier eager
+    localCheckpoint built DESERIALIZED heap blocks —
     at 5M docs (~230M feature rows) that OOMed an 8g JVM during
     checkpoint materialization; serialized blocks unroll incrementally
     and spill, keeping the iteration loop disk-bounded at any corpus
     size.
 
-    ``features``: optionally a precomputed :func:`hashed_features`
-    frame for ``docs`` (same ``n_buckets``) — callers that also score
-    the same documents build the feature table once instead of paying
-    the tokenize→hash→aggregate pass twice. ``return_features=True``
-    returns ``(weights, labeled)`` where ``labeled`` is the PERSISTED
-    ``(id, bucket, x_u, y)`` table the iterations ran on — pass
-    ``labeled`` (or a projection/filter of it) to :func:`classify` as
-    ``features`` and call ``labeled.unpersist()`` when the scoring
-    pass has been materialized; with the default ``False`` the table
-    is released before returning, as before.
+    ``features``: the caller's own (persisted) :func:`labeled_features`
+    table for ``docs`` and ``label`` (same ``n_buckets``), read as is
+    — the caller releases it.
     """
     from pyspark import StorageLevel
 
-    feats = (
-        features
-        if features is not None
-        else hashed_features(
-            docs, text_col=text_col, id_col=id_col, n_buckets=n_buckets
+    with MaterializeScope() as scope:
+        labeled = (
+            features
+            if features is not None
+            else scope.hold(
+                labeled_features(
+                    docs, label, text_col=text_col, id_col=id_col, n_buckets=n_buckets
+                ),
+                StorageLevel.MEMORY_AND_DISK,
+            )
         )
-    )
-    y = docs.select(F.col(id_col).alias("id"), label.cast("int").alias("y"))
-    labeled = feats.join(y, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        w = _gd_iterate(labeled, docs.sparkSession, n_buckets, iters, lr)
-    except BaseException:
-        # release when an iteration/collect raises — the persisted
-        # feature table is O(n_docs × tokens) and would otherwise leak
-        # for the session
-        labeled.unpersist()
-        raise
-    if return_features:
-        # the caller owns the release now (after materializing scoring)
-        return w, labeled
-    labeled.unpersist()
-    return w
+        return _gd_iterate(labeled, docs.sparkSession, n_buckets, iters, lr)
 
 
 def _gd_iterate(labeled, spark, n_buckets: int, iters: int, lr: float):
     """The micro-unit gradient-descent loop over the persisted feature
-    table (split out so train_quality_classifier can guarantee the
-    unpersist in a finally).
+    table.
 
     r13 loop-shape notes (measured on the per-iteration plans): the
     persisted table is already hash-partitioned by ``id`` (the feature
@@ -299,10 +302,10 @@ def classify(
 
     ``features``: optionally a precomputed :func:`hashed_features`
     frame for ``docs`` (extra columns are ignored) — a caller that
-    just trained on the same documents passes the trainer's persisted
-    ``labeled`` table (``return_features=True``) so scoring reads the
-    persisted blocks instead of re-running the tokenize→hash→aggregate
-    pass over the corpus."""
+    just trained on the same documents passes its persisted
+    :func:`labeled_features` table so scoring reads the persisted
+    blocks instead of re-running the tokenize→hash→aggregate pass
+    over the corpus."""
     feats = (
         features
         if features is not None

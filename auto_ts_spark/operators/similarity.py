@@ -13,14 +13,18 @@ Arrow transfer; at 100 TB the scan stays in whole-stage codegen.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import nullcontext
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from auto_ts_spark.operators.partitioning import ensure_parallelism
+from auto_ts_spark.operators.partitioning import (
+    MaterializeScope,
+    checkpoint,
+    ensure_parallelism,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -80,18 +84,18 @@ def brute_force_topk(
     # cast AND norm once per row in the projections (r14): previously
     # both the array<double> cast and the two O(dim) norm aggregates
     # were re-evaluated per (query, corpus) pair in the scored select
-    qv = F.col(vec_col).cast("array<double>")
+    v = F.col(vec_col).cast("array<double>")
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
-            qv.alias("qvec"),
-            norm(qv).alias("_qn"),
+            v.alias("qvec"),
+            norm(v).alias("_qn"),
         )
     )
     c = ensure_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"),
-        qv.alias("cvec"),
-        norm(qv).alias("_cn"),
+        v.alias("cvec"),
+        norm(v).alias("_cn"),
     )
     scored = (
         c.crossJoin(q)
@@ -588,7 +592,7 @@ def ivf_assign_bounded(
     seed: int = 42,
     max_cell_size: int = 1024,
     max_levels: int = 3,
-    release_handles: list | None = None,
+    scope: MaterializeScope | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """``(id, vec, cell)`` with every cell bounded to ``max_cell_size``
@@ -635,20 +639,16 @@ def ivf_assign_bounded(
     fall through to the next (or to the hash-split fallback) — the
     bound still holds; only the split geometry is coarser there.
 
-    Caching follows the release contract. With ``release_handles`` (a
-    list; every still-persisted frame is appended — or use the
-    :func:`bounded_assignment` context manager, which releases on
-    exit) each level is persisted (size-aware level, see
-    :func:`vec_storage_level`): the hot-cell count materializes it
-    once and the caller's downstream joins — semantic dedup consumes
-    the assignment TWICE in its pair self-join — read the cache
-    instead of recomputing the Arrow-batched assignment. With
-    ``release_handles=None`` nothing is left persisted: the common
-    no-hot-cell case counts the lazy frame and returns it un-persisted
-    (zero materialization tax), and the splitting case returns an
-    eager ``localCheckpoint`` with all internal persists released
-    (checkpoint blocks are owned by the returned frame and cleaned up
-    when it is garbage-collected — no session-lifetime leak).
+    Materialization: each level is held in ``scope`` (size-aware
+    level, see :func:`vec_storage_level`): the hot-cell count
+    materializes it once and the caller's downstream joins — semantic
+    dedup consumes the assignment TWICE in its pair self-join — read
+    the held blocks instead of recomputing the Arrow-batched
+    assignment. The blocks are released when the caller's scope exits,
+    so the caller materializes what it derives before that. Without a
+    scope the result is an eager checkpoint and every internal persist
+    is released before returning (the checkpoint's blocks belong to
+    the returned frame).
     """
     spark = df.sparkSession
     level = vec_storage_level(df)
@@ -660,7 +660,6 @@ def ivf_assign_bounded(
         sample_size=sample_size,
         seed=seed,
     ).withColumn("cell", F.col("cell").cast("bigint"))
-    internal: list = []
 
     def _hot(frame: DataFrame) -> list:
         return (
@@ -670,119 +669,65 @@ def ivf_assign_bounded(
             .collect()
         )
 
-    # Persist strategy depends on the release contract. WITH a
-    # ``release_handles`` list (the semantic_dedup path) level 0 is
-    # persisted up front: the hot-cell count materializes it once and
-    # the caller's downstream self-join reads the cache instead of
-    # recomputing the Arrow-batched assignment per consumer — the
-    # caller releases it when done. WITHOUT a contract nothing may
-    # stay persisted, so the count runs on the UN-persisted frame
-    # first: if no cell is over cap (the common case below ~524k
-    # vectors) the lazy assignment is returned as-is — zero persists,
-    # nothing to leak, the caller's plan recomputes it like any
-    # other lazy frame.
-    pre_hot: list | None = None
     if stats is not None:
         stats["sub_levels"] = 0
         stats["hash_split_cells"] = 0
-    if release_handles is None:
-        pre_hot = _hot(assigned)
-        if not pre_hot:
-            return assigned
     prev = None
     hot_rows: list = []
-    for lvl in range(max_levels + 1):
-        assigned = assigned.persist(level)
-        internal.append(assigned)
-        # level 0 on the no-contract path already counted this exact
-        # frame pre-persist — reuse it instead of a second full pass
-        # (the persist is materialized lazily by the sub-quantizer
-        # sample below, or by the level-1 count)
-        hot_rows = pre_hot if (lvl == 0 and pre_hot is not None) else _hot(assigned)
-        if prev is not None:
-            # the action above materialized the child's persist, so
-            # the parent level's blocks are no longer needed
-            prev.unpersist()
-            internal.remove(prev)
-        prev = assigned
-        if not hot_rows or lvl == max_levels:
-            break
-        lseed = seed + 1000 * (lvl + 1)
-        hot_set = F.broadcast(
-            spark.createDataFrame([(r["cell"],) for r in hot_rows], "cell bigint")
-        )
-        cold = assigned.join(hot_set, "cell", "left_anti")
-        hot = assigned.join(hot_set, "cell", "left_semi")
-        n_hot = sum(r["n"] for r in hot_rows)
-        k2 = max(16, min(1024, -(-n_hot // 512)))
-        s2 = min(max(sample_size, 8 * k2), 16384)
-        if stats is not None:
-            stats["sub_levels"] = lvl + 1
-        sub_sample = _quantizer_sample(hot, "id", "vec", s2, lseed)
-        cents = kmeans_centroids(sub_sample, k2, seed=lseed)
-        nearest_sub = _nearest_cell_udf(spark.sparkContext.broadcast(cents))
-        hot2 = hot.withColumn(
-            "cell", F.xxhash64(F.col("cell"), nearest_sub("vec"))
-        )
-        assigned = cold.unionByName(hot2)
-    if hot_rows:
-        if stats is not None:
-            stats["hash_split_cells"] = len(hot_rows)
-        # last resort: hash-split the stubborn cells (near-identical
-        # vectors the sub-quantizer can't separate) by vector value,
-        # with 2x slack parts so overshoot past the cap is negligible
-        split_map = F.broadcast(
-            spark.createDataFrame(
-                [(r["cell"], -(-2 * r["n"] // max_cell_size)) for r in hot_rows],
-                "cell bigint, _ns int",
+    with MaterializeScope() if scope is None else nullcontext(scope) as held:
+        for lvl in range(max_levels + 1):
+            assigned = held.hold(assigned, level)
+            hot_rows = _hot(assigned)
+            if prev is not None:
+                # the action above materialized the child's persist, so
+                # the parent level's blocks are no longer needed
+                held.release(prev)
+            prev = assigned
+            if not hot_rows or lvl == max_levels:
+                break
+            lseed = seed + 1000 * (lvl + 1)
+            hot_set = F.broadcast(
+                spark.createDataFrame([(r["cell"],) for r in hot_rows], "cell bigint")
             )
-        )
-        cold = assigned.join(split_map.select("cell"), "cell", "left_anti")
-        hot2 = (
-            assigned.join(split_map, "cell")
-            .withColumn(
-                "cell",
-                F.xxhash64(
-                    F.col("cell"), F.pmod(F.xxhash64(F.col("vec")), F.col("_ns"))
-                ),
+            cold = assigned.join(hot_set, "cell", "left_anti")
+            hot = assigned.join(hot_set, "cell", "left_semi")
+            n_hot = sum(r["n"] for r in hot_rows)
+            k2 = max(16, min(1024, -(-n_hot // 512)))
+            s2 = min(max(sample_size, 8 * k2), 16384)
+            if stats is not None:
+                stats["sub_levels"] = lvl + 1
+            sub_sample = _quantizer_sample(hot, "id", "vec", s2, lseed)
+            cents = kmeans_centroids(sub_sample, k2, seed=lseed)
+            nearest_sub = _nearest_cell_udf(spark.sparkContext.broadcast(cents))
+            hot2 = hot.withColumn(
+                "cell", F.xxhash64(F.col("cell"), nearest_sub("vec"))
             )
-            .drop("_ns")
-        )
-        assigned = cold.unionByName(hot2)
-    if release_handles is not None:
-        release_handles.extend(internal)
-        return assigned
-    # no release contract from the caller: hand back a self-contained
-    # frame (eager localCheckpoint) and drop every internal persist —
-    # checkpoint blocks die with the returned frame's GC, cache
-    # entries would otherwise outlive the session.
-    out = assigned.localCheckpoint(eager=True)
-    for h in internal:
-        h.unpersist()
-    return out
-
-
-@contextmanager
-def bounded_assignment(df: DataFrame, **kwargs):
-    """Context-manager form of :func:`ivf_assign_bounded`: yields the
-    bounded ``(id, vec, cell)`` frame and unpersists every internal
-    cache on exit (including on exceptions) — the recommended way to
-    consume a bounded assignment when you control the consuming scope:
-
-        with bounded_assignment(df, max_cell_size=1024) as blocked:
-            ...joins against blocked...   # materialize inside
-
-    The yielded frame's persisted blocks are released on exit, so any
-    result that must survive the block has to be materialized (count,
-    write, localCheckpoint) before leaving it — exactly how
-    :func:`semantic_dedup` uses it.
-    """
-    handles: list = []
-    try:
-        yield ivf_assign_bounded(df, release_handles=handles, **kwargs)
-    finally:
-        for h in handles:
-            h.unpersist()
+            assigned = cold.unionByName(hot2)
+        if hot_rows:
+            if stats is not None:
+                stats["hash_split_cells"] = len(hot_rows)
+            # last resort: hash-split the stubborn cells (near-identical
+            # vectors the sub-quantizer can't separate) by vector value,
+            # with 2x slack parts so overshoot past the cap is negligible
+            split_map = F.broadcast(
+                spark.createDataFrame(
+                    [(r["cell"], -(-2 * r["n"] // max_cell_size)) for r in hot_rows],
+                    "cell bigint, _ns int",
+                )
+            )
+            cold = assigned.join(split_map.select("cell"), "cell", "left_anti")
+            hot2 = (
+                assigned.join(split_map, "cell")
+                .withColumn(
+                    "cell",
+                    F.xxhash64(
+                        F.col("cell"), F.pmod(F.xxhash64(F.col("vec")), F.col("_ns"))
+                    ),
+                )
+                .drop("_ns")
+            )
+            assigned = cold.unionByName(hot2)
+        return assigned if scope is not None else checkpoint(assigned)
 
 
 def semantic_dedup(
@@ -842,8 +787,6 @@ def semantic_dedup(
     the training-data curation surface alongside
     ``dedup.dedup_clusters``.
     """
-    from contextlib import nullcontext
-
     from pyspark.sql import Window
 
     from auto_ts_spark.operators.dedup import clusters_from_pairs
@@ -867,16 +810,17 @@ def semantic_dedup(
     # every sort step; `vec` stays in the key so hash collisions can't
     # merge distinct values (exactness preserved)
     wv = Window.partitionBy(F.xxhash64(F.col("vec")), *grp_cols)
-    # `tagged` feeds BOTH the star branch and the reduced/pair branch;
-    # persisted so the corpus-wide collapse window computes once
-    # (exchange reuse does not reliably cover two differently-filtered
-    # consumers), released in the finally below.
-    tagged = (
-        src.withColumn("_rep", F.min("id").over(wv))
-        .withColumn("_nz", norm(F.col("vec")) > 0)
-        .persist(vec_storage_level(src))
-    )
-    try:
+    with MaterializeScope() as scope:
+        # `tagged` feeds BOTH the star branch and the reduced/pair
+        # branch; held so the corpus-wide collapse window computes once
+        # (exchange reuse does not reliably cover two differently-
+        # filtered consumers)
+        tagged = scope.hold(
+            src.withColumn("_rep", F.min("id").over(wv)).withColumn(
+                "_nz", norm(F.col("vec")) > 0
+            ),
+            vec_storage_level(src),
+        )
         star = (
             tagged.filter(F.col("_nz") & (F.col("_rep") != F.col("id")))
             .select(
@@ -889,8 +833,8 @@ def semantic_dedup(
         reduced = tagged.filter(
             F.col("_nz") & (F.col("_rep") == F.col("id"))
         ).drop("_rep", "_nz")
-        ctx = (
-            bounded_assignment(
+        blocked = (
+            ivf_assign_bounded(
                 reduced,
                 id_col="id",
                 vec_col="vec",
@@ -898,54 +842,51 @@ def semantic_dedup(
                 sample_size=sample_size,
                 seed=seed,
                 max_cell_size=max_cell_size,
+                scope=scope,
             )
             if block_col is None
-            else nullcontext(reduced)
+            else reduced
         )
-        with ctx as blocked:
-            # norm once per row per side (r14, cosine_with_norms): in a
-            # cell of m vectors the pair verify was re-running the
-            # O(dim) norm aggregate 2(m-1) times per vector; one extra
-            # double per row through the cell join replaces all of them
-            a = blocked.select(
-                "cell",
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("va"),
-                norm(F.col("vec")).alias("_na"),
+        # norm once per row per side (r14, cosine_with_norms): in a
+        # cell of m vectors the pair verify was re-running the O(dim)
+        # norm aggregate 2(m-1) times per vector; one extra double per
+        # row through the cell join replaces all of them
+        a = blocked.select(
+            "cell",
+            F.col("id").alias("id_a"),
+            F.col("vec").alias("va"),
+            norm(F.col("vec")).alias("_na"),
+        )
+        b = blocked.select(
+            "cell",
+            F.col("id").alias("id_b"),
+            F.col("vec").alias("vb"),
+            norm(F.col("vec")).alias("_nb"),
+        )
+        pairs = (
+            a.join(b, "cell")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select(
+                "id_a",
+                "id_b",
+                F.round(
+                    cosine_with_norms(
+                        F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
+                    ),
+                    6,
+                ).alias("cosine"),
             )
-            b = blocked.select(
-                "cell",
-                F.col("id").alias("id_b"),
-                F.col("vec").alias("vb"),
-                norm(F.col("vec")).alias("_nb"),
-            )
-            pairs = (
-                a.join(b, "cell")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.round(
-                        cosine_with_norms(
-                            F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb")
-                        ),
-                        6,
-                    ).alias("cosine"),
-                )
-                .filter(F.col("cosine") >= F.lit(threshold))
-                # no dropDuplicates: every id sits in exactly ONE cell
-                # (a block label, or the bounded IVF assignment), so the
-                # id_a < id_b cell join emits each unordered pair once —
-                # and the only consumer is connected components, whose
-                # labels are per-node (duplicate edges could not change
-                # them anyway). The r12 dedup shuffled the full pair set
-                # for nothing (one whole Exchange at any scale).
-                .unionByName(star)
-            )
-            # connected_components eagerly localCheckpoints its labels,
-            # so the returned frame references neither the blocked
-            # assignment nor `tagged` — safe to release both on exit
-            # (the with-block and finally cover exceptions too)
-            return clusters_from_pairs(pairs, id_col=id_col, cc_stats=cc_stats)
-    finally:
-        tagged.unpersist()
+            .filter(F.col("cosine") >= F.lit(threshold))
+            # no dropDuplicates: every id sits in exactly ONE cell (a
+            # block label, or the bounded IVF assignment), so the
+            # id_a < id_b cell join emits each unordered pair once —
+            # and the only consumer is connected components, whose
+            # labels are per-node (duplicate edges could not change
+            # them anyway). The r12 dedup shuffled the full pair set
+            # for nothing (one whole Exchange at any scale).
+            .unionByName(star)
+        )
+        # connected components materializes its labels eagerly, so the
+        # returned frame references neither the blocked assignment nor
+        # `tagged` — safe to release both when the scope exits
+        return clusters_from_pairs(pairs, id_col=id_col, cc_stats=cc_stats)

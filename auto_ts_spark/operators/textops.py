@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auto_ts_spark.functions import text as TX
-from auto_ts_spark.operators.partitioning import ensure_parallelism
+from auto_ts_spark.operators.partitioning import MaterializeScope, ensure_parallelism
 
 
 def profile_metric_exprs(
@@ -590,7 +590,7 @@ def drop_boilerplate_lines(
     every other column — the form the curation chain consumes. Apply
     mode reads the input plan TWICE (count side + join side): persist
     the input first when it is expensive to recompute (``curate``
-    caches it for you).
+    checkpoints it for you).
     NULL-text documents emit no lines and therefore no output row in
     either mode (the explode's standard NULL policy — pre-filter if
     they must survive)."""
@@ -682,7 +682,7 @@ def scrub_repeated_spans(
     window: int = 8,
     min_dup_docs: int = 2,
     mode: str = "profile",
-    release_handles: list | None = None,
+    scope: MaterializeScope | None = None,
 ) -> DataFrame:
     """Cross-document repeated-span scrubbing — the distributed
     approximation of suffix-array ExactSubstr dedup (Lee et al. 2022,
@@ -721,6 +721,11 @@ def scrub_repeated_spans(
     clean_text and zero counts. ``mode="apply"`` joins the scrubbed
     text back over the input frame (the curation-chain form; reads the
     input plan twice — persist upstream when expensive).
+
+    ``scope``: above the input-size gate the token frame (read by two
+    plan branches) is held DISK_ONLY in the caller's scope, so the
+    corpus is tokenized once per action; the caller materializes the
+    result before the scope exits. Without a scope nothing is held.
     """
     if mode not in ("profile", "apply"):
         raise ValueError(f"unknown mode: {mode!r}")
@@ -731,24 +736,20 @@ def scrub_repeated_spans(
         F.col(id_col).alias("_doc"), raw_tokens.alias("_tk")
     )
     big_input = _wants_fp_repartition(df)
-    if big_input and release_handles is not None:
+    if big_input and scope is not None:
         # the token frame feeds TWO plan branches (the span explode and
         # the coverage rejoin), so without a persist the whitespace
         # tokenization of the whole corpus runs twice (r13 verdict's
         # top "not yet" item). Above the same compile-time size gate as
-        # the fingerprint repartition, persist it DISK_ONLY —
+        # the fingerprint repartition, hold it DISK_ONLY —
         # write-through, so the token arrays never compete with
         # execution heap (the similarity.vec_storage_level rationale) —
         # and the second branch re-reads tokens instead of re-splitting
         # text. Below the gate (bench scale) the recompute is cheaper
-        # than the block round-trip, so the plan is unchanged. Persist
-        # only when the caller accepts release responsibility via
-        # ``release_handles`` (the ivf_assign_bounded contract);
-        # ``None`` leaves nothing pinned.
+        # than the block round-trip, so the plan is unchanged.
         from pyspark import StorageLevel
 
-        toks = toks.persist(StorageLevel.DISK_ONLY)
-        release_handles.append(toks)
+        toks = scope.hold(toks, StorageLevel.DISK_ONLY)
     n = F.size(F.col("_tk"))
     spans = toks.select(
         "_doc",

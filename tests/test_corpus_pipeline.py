@@ -624,3 +624,51 @@ def test_prepare_rag_corpus_argument_errors(spark):
         prepare_rag_corpus(docs)
     with pytest.raises(ValueError, match="did not add"):
         prepare_rag_corpus(docs, embed=lambda c: c)
+
+
+def test_curate_raise_after_scrub_releases_everything(spark):
+    """A curate() call that raises after the span-scrub stage must leave
+    no persisted block behind: neither a CacheManager entry nor a
+    persistent RDD (the scrub's token frame above its size gate, the
+    stage checkpoints). The input's huge pre-filter estimate drives the
+    scrub above its 256 MB gate with 4 real rows."""
+    import pytest
+
+    shared = "one two three four five six seven eight"
+    big_est = (
+        spark.range(2_000_000_000)  # ~16 GB estimate, no CBO filter stats
+        .filter("id < 4")
+        .select(
+            F.col("id").alias("doc_id"),
+            F.when(
+                F.col("id") < 2, F.lit(f"lead {shared} tail")
+            ).otherwise(F.lit("plain unrelated words only")).alias("text"),
+        )
+    )
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = set(dict(sc._jsc.getPersistentRDDs()))
+    with pytest.raises(ValueError, match="near_dedup_method"):
+        curate(big_est, scrub_spans=True, near_dedup_method="bogus")
+    assert cm.isEmpty()
+    assert not (set(dict(sc._jsc.getPersistentRDDs())) - before)
+
+
+def test_curate_full_leaves_cache_manager_empty(spark, sf_dir):
+    """Two curate_full-shaped calls (bench.py's full recipe), each
+    collected and then dropped, must leave the CacheManager empty:
+    every intermediate a stage holds is released inside the call, and
+    the checkpoints the result reads never enter the CacheManager."""
+    import bench
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cm.isEmpty()
+    digests = []
+    for _ in range(2):
+        out = bench.q_curate_full(spark, sf_dir)
+        digests.append(sorted(map(tuple, out.select("doc_id", "copy_n").collect())))
+        del out
+        assert cm.isEmpty()
+    assert digests[0] == digests[1] and digests[0]

@@ -104,32 +104,32 @@ def test_reference_scores_low(spark):
 
 
 def test_release_frees_cached_tables(spark):
-    """NgramLM.release() must actually unpersist the pinned count
-    table(s) so repeated curate() runs in one session don't accumulate
-    O(vocab + bigrams) cached blocks (r6 judge item; r13: the pin is
-    the single combined (kind, gram) table uni/bi derive from)."""
+    """The LM's count table must not outlive its owner, so repeated
+    curate() runs in one session don't accumulate O(vocab + bigrams)
+    cached blocks (r6 judge item): held in a caller's scope it is
+    released when the scope exits; without a scope it is a checkpoint
+    owned by the LM and never enters the CacheManager."""
     from auto_ts_spark.operators.lm_quality import train_ngram_lm
-
-    def _cached(frame) -> bool:
-        lvl = frame.storageLevel
-        return lvl.useMemory or lvl.useDisk
+    from auto_ts_spark.operators.partitioning import MaterializeScope
 
     ref = spark.createDataFrame(
         [(1, "alpha beta gamma alpha"), (2, "beta gamma delta")],
         "doc_id long, text string",
     )
-    lm = train_ngram_lm(ref)
-    assert lm.pinned, "train_ngram_lm must pin its count table"
-    assert all(_cached(t) for t in lm.pinned)
-    lm.release()
-    assert not any(_cached(t) for t in lm.pinned)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    # start from a known-clean cache registry so the checks are exact
+    spark.catalog.clearCache()
+    with MaterializeScope() as scope:
+        lm = train_ngram_lm(ref, scope=scope)
+        assert not cm.isEmpty()
+        assert lm.uni.count() == 4
+    assert cm.isEmpty()
     # the LM remains usable after release (recomputes from the plan)
     assert lm.uni.count() == 4
 
-    # context-manager form releases on exit
-    with train_ngram_lm(ref) as lm2:
-        assert all(_cached(t) for t in lm2.pinned)
-    assert not any(_cached(t) for t in lm2.pinned)
+    lm2 = train_ngram_lm(ref)
+    assert cm.isEmpty()
+    assert lm2.bi.count() == 4
 
 
 def test_lazy_curate_releases_lm_cache(spark):

@@ -183,11 +183,12 @@ def test_lm_scoring_single_corpus_scan(spark):
     corpus ONCE — the pair explode is zip_with-built from one staged
     token array, never a posexplode over a kept array or a self-join.
 
-    Raw split() counts are useless here: InMemoryRelation.toString()
-    dumps the cached LM build plan verbatim, so the plan STRING
-    contains the reference-side tokenizers even though they never
-    re-execute. The corpus-side scan is the only FileScan that reads
-    ``doc_id`` (the LM tables only read text+lang), so pin on that."""
+    Raw split() counts are useless here: a cached LM table's
+    InMemoryRelation.toString() dumps its build plan verbatim, so the
+    plan STRING can contain the reference-side tokenizers even though
+    they never re-execute. The corpus-side scan is the only FileScan
+    that reads ``doc_id`` (the LM tables only read text+lang), so pin
+    on that."""
     from pyspark.sql import functions as F
 
     from auto_ts_spark.operators import lm_quality as LQ
@@ -206,8 +207,6 @@ def test_lm_scoring_single_corpus_scan(spark):
         if "Relation" in ln and "parquet" in ln and "doc_id" in ln
     ]
     assert len(corpus_scans) == 1, plan
-    lm.uni.unpersist()
-    lm.bi.unpersist()
 
 
 def test_classifier_features_single_scan(spark):

@@ -98,8 +98,8 @@ def test_training_leaves_no_cached_blocks(spark):
 
 def test_entry_query_releases_feature_table_across_runs(spark):
     """r14 (verdict #7): the entry's q_quality_classifier reuses the
-    trainer's persisted feature table for scoring (return_features) —
-    it must RELEASE it before returning, so repeated library calls in
+    persisted labeled feature table for scoring — it must RELEASE it
+    before returning, so repeated library calls in
     one session accumulate no pinned CacheManager blocks. Delta-based
     like the trainer test above: two invocations + actions must leave
     the persistent-RDD count where it started (the eager checkpoint's

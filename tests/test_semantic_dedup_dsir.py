@@ -260,12 +260,13 @@ def test_ivf_assign_bounded_fallback_keeps_identical_vectors_together(spark):
     assert cells == 1
 
 
-def test_bounded_assignment_ctx_releases_persists(spark):
-    """r9 release contract: the context-manager form must leave ZERO
-    cache entries behind after exit — including when the body raises —
-    so a direct consumer can't leak the per-level persists for the
-    session (r8 left this to a mutate-my-argument list)."""
-    from auto_ts_spark.operators.similarity import bounded_assignment
+def test_ivf_assign_bounded_scope_releases_persists(spark):
+    """The per-level persists live in the caller's MaterializeScope:
+    ZERO storage entries survive the scope's exit — including when the
+    body raises — so a direct consumer can't leak them for the
+    session."""
+    from auto_ts_spark.operators.partitioning import MaterializeScope
+    from auto_ts_spark.operators.similarity import ivf_assign_bounded
 
     sc = spark.sparkContext
 
@@ -276,14 +277,18 @@ def test_bounded_assignment_ctx_releases_persists(spark):
 
     base = stored_ids()
     df = _spread_vectors(spark, n=120)
-    with bounded_assignment(df, n_centroids=2, max_cell_size=10) as out:
+    with MaterializeScope() as scope:
+        out = ivf_assign_bounded(df, n_centroids=2, max_cell_size=10, scope=scope)
         assert out.count() == 120
         new = stored_ids() - base
         assert new  # the final level IS persisted inside the block
     assert not (stored_ids() & new)
-    # exception path: the finally must still release
+    # exception path: the exit must still release
     with pytest.raises(RuntimeError):
-        with bounded_assignment(df, n_centroids=2, max_cell_size=10) as out:
+        with MaterializeScope() as scope:
+            out = ivf_assign_bounded(
+                df, n_centroids=2, max_cell_size=10, scope=scope
+            )
             out.count()
             new = stored_ids() - base
             raise RuntimeError("boom")
@@ -291,9 +296,8 @@ def test_bounded_assignment_ctx_releases_persists(spark):
 
 
 def test_ivf_assign_bounded_none_handles_self_contained(spark):
-    """With ``release_handles=None`` (a caller that never heard of the
-    release contract) nothing may stay in the cache manager: the
-    result is checkpointed and self-contained, correct after an
+    """Without a caller scope nothing may stay in the cache manager:
+    the result is checkpointed and self-contained, correct after an
     explicit clearCache, and adds no cache entries."""
     from auto_ts_spark.operators.similarity import ivf_assign_bounded
 

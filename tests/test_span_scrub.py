@@ -204,11 +204,12 @@ def test_empty_and_whitespace_only_docs_do_not_crash(spark):
 def test_token_persist_gate_and_release_contract(spark):
     """r14: above the compile-time input-size gate the operator may
     persist the token frame (one tokenize pass instead of two) — but
-    ONLY when the caller accepts release responsibility by passing
-    ``release_handles``; with ``None`` nothing is ever pinned. The
-    gate reads the optimizer estimate (zero jobs), so a tiny filtered
-    range with a huge pre-filter estimate exercises the big branch
-    with 4 real rows."""
+    ONLY in a caller's MaterializeScope, which releases it on exit;
+    without a scope nothing is ever pinned. The gate reads the
+    optimizer estimate (zero jobs), so a tiny filtered range with a
+    huge pre-filter estimate exercises the big branch with 4 real
+    rows."""
+    from auto_ts_spark.operators.partitioning import MaterializeScope
     from auto_ts_spark.operators.textops import scrub_repeated_spans
 
     big_est = (
@@ -221,29 +222,34 @@ def test_token_persist_gate_and_release_contract(spark):
             ).otherwise(F.lit("plain unrelated words only")).alias("text"),
         )
     )
+    sc = spark.sparkContext
 
-    # caller accepts release responsibility -> DISK_ONLY token persist
-    handles: list = []
-    out = (
-        scrub_repeated_spans(big_est, window=8, release_handles=handles)
-        .toPandas()
-        .set_index("doc_id")
-    )
-    try:
-        assert len(handles) == 1
-        lvl = handles[0].storageLevel
-        assert lvl.useDisk is True and lvl.useMemory is False  # DISK_ONLY
-        # semantics unchanged by the persist: docs 0 and 1 are fully
-        # identical 10-token texts, so every window is duplicated and
-        # all 10 tokens are scrubbed
-        assert out.loc[0, "n_tokens_removed"] == 10
-        assert out.loc[1, "n_tokens_removed"] == 10
-        assert out.loc[2, "n_tokens_removed"] == 0
-    finally:
-        for h in handles:
-            h.unpersist()
+    def stored() -> dict:
+        # by RDD id: other suites' dead checkpoint blocks get cleaned
+        # asynchronously, so only entries new to this test count
+        return {i.id(): i.storageLevel() for i in sc._jsc.sc().getRDDStorageInfo()}
 
-    # no handles -> nothing pinned, even above the gate
+    # a caller scope -> DISK_ONLY token persist, released on exit
+    base = stored()
+    with MaterializeScope() as scope:
+        out = (
+            scrub_repeated_spans(big_est, window=8, scope=scope)
+            .toPandas()
+            .set_index("doc_id")
+        )
+        new = {k: v for k, v in stored().items() if k not in base}
+        assert len(new) == 1
+        lvl = next(iter(new.values()))
+        assert lvl.useDisk() and not lvl.useMemory()  # DISK_ONLY
+    assert not (set(stored()) & set(new))
+    # semantics unchanged by the persist: docs 0 and 1 are fully
+    # identical 10-token texts, so every window is duplicated and all
+    # 10 tokens are scrubbed
+    assert out.loc[0, "n_tokens_removed"] == 10
+    assert out.loc[1, "n_tokens_removed"] == 10
+    assert out.loc[2, "n_tokens_removed"] == 0
+
+    # no scope -> nothing pinned, even above the gate
     before = dict(spark.sparkContext._jsc.getPersistentRDDs())
     out2 = scrub_repeated_spans(big_est, window=8).toPandas().set_index("doc_id")
     after = dict(spark.sparkContext._jsc.getPersistentRDDs())
@@ -252,10 +258,11 @@ def test_token_persist_gate_and_release_contract(spark):
 
     # small input (tiny KNOWN estimate — range stats; a createDataFrame
     # LogicalRDD has unknown stats and takes the scale-safe big branch)
-    # -> gate off, list stays empty
+    # -> gate off, nothing persisted
     small = spark.range(4).select(
         F.col("id").alias("doc_id"), F.lit(f"a {SHARED} b").alias("text")
     )
-    handles2: list = []
-    scrub_repeated_spans(small, window=8, release_handles=handles2).collect()
-    assert handles2 == []
+    base = stored()
+    with MaterializeScope() as scope:
+        scrub_repeated_spans(small, window=8, scope=scope).collect()
+        assert not (set(stored()) - set(base))

@@ -105,8 +105,6 @@ def main(dirs: list[str]) -> None:
             "docs_per_sec": round(n / lm_wall),
             "tercile_rows": n_b,
         }), flush=True)
-        lm.uni.unpersist()
-        lm.bi.unpersist()
 
         t0 = time.perf_counter()
         w = QC.train_quality_classifier(

@@ -63,6 +63,7 @@ def _make_vectors(path: str, n: int) -> None:
 def probe(spark, n: int, workdir: str, max_cell_size: int = 1024) -> dict:
     from pyspark.sql import functions as F
 
+    from auto_ts_spark.operators.partitioning import MaterializeScope
     from auto_ts_spark.operators.similarity import (
         ivf_assign_bounded,
         semantic_dedup,
@@ -75,24 +76,22 @@ def probe(spark, n: int, workdir: str, max_cell_size: int = 1024) -> dict:
 
     # --- blocking shape: candidate pair work after bounding ---------
     t0 = time.perf_counter()
-    handles: list = []
     bstats: dict = {}
-    assigned = ivf_assign_bounded(
-        df, max_cell_size=max_cell_size, release_handles=handles, stats=bstats
-    )
-    hist = (
-        assigned.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("pair_work"),
-            F.max("c").alias("max_cell"),
-            F.count(F.lit(1)).alias("n_cells"),
+    with MaterializeScope() as scope:
+        assigned = ivf_assign_bounded(
+            df, max_cell_size=max_cell_size, scope=scope, stats=bstats
         )
-        .first()
-    )
+        hist = (
+            assigned.groupBy("cell")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .agg(
+                F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("pair_work"),
+                F.max("c").alias("max_cell"),
+                F.count(F.lit(1)).alias("n_cells"),
+            )
+            .first()
+        )
     assign_wall = time.perf_counter() - t0
-    for h in handles:
-        h.unpersist()
 
     # --- full semantic dedup (collapse + bounded blocking + CC) -----
     cc: dict = {}
